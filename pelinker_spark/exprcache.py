@@ -5,7 +5,7 @@ py4j round trip into the JVM (~50-200 us each), and the link pipeline's
 DSL — mention window structs, token normalization CASE trees, the 16
 minhash aggregates, the unrolled cosine sum — adds up to ~1.6 s of pure
 driver-side construction PER PIPELINE CALL, re-paid on every run and
-every streaming micro-batch (measured round 6: build_surfaces_df 0.6 s +
+every streaming micro-batch (measured: build_surfaces_df 0.6 s +
 build_edges_df 1.0 s at steady state, while Catalyst analyze/optimize/
 physical together cost < 50 ms).
 
@@ -13,8 +13,9 @@ Unresolved Column objects are immutable expression wrappers and are
 safely reusable across DataFrames and queries, so fragments that depend
 only on hashable config (window widths, hash counts, dims) are built
 once per JVM session and reused. The cache is keyed on the active
-SparkContext so a stop()/restart in one process can never leak stale
-py4j references into a new JVM.
+SparkContext's identity (application id, start time), not on the Python
+object's id, which a context restarted in the same process can reuse: a
+stop()/restart can never serve stale py4j references from the old JVM.
 """
 
 from __future__ import annotations
@@ -37,11 +38,12 @@ def session_cached(fn: Callable[..., T]) -> Callable[..., T]:
         from pyspark import SparkContext
 
         sc = SparkContext._active_spark_context
-        key = (id(sc), args)
+        ctx = (sc.applicationId, sc.startTime)
+        key = (ctx, args)
         if key not in cache:
             # drop fragments from dead sessions so a long-lived process
             # that restarts Spark doesn't accumulate stale gateway refs
-            for k in [k for k in cache if k[0] != id(sc)]:
+            for k in [k for k in cache if k[0] != ctx]:
                 del cache[k]
             cache[key] = fn(*args)
         return cache[key]

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, asdict
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,9 +83,6 @@ class LinkConfig:
     # fused vector (= mean of per-source cosines for unit parts), the
     # model-selection fused re-evaluation path (runner.py:584-812).
     encoder_variants: tuple[str, ...] = ("default",)
-    # eager barrier after the surface groupBy (see link_pipeline); off only
-    # for plan-shape experiments — was a module-global test hook before
-    surface_barrier: bool = True
     # incremental-state bucketing fanout: buckets/ and compact/ state is
     # partitioned by pmod(xxhash64(bh|ck), state_prefixes) so a
     # micro-batch's history probe prunes at the FILE SOURCE (only
@@ -92,11 +90,11 @@ class LinkConfig:
     # scanning all accumulated membership per batch. Shared through
     # LinkConfig for the same parity reason as the caps above.
     state_prefixes: int = 64
-    # per-mention link_score/exact_key feature (VERDICT r2 #4). Default on
+    # per-mention link_score/exact_key feature. Default on
     # (the public projection carries it); callers that only need cluster
     # ids (the scaling bench's hot path, bulk re-cluster jobs) can turn it
     # off to skip the incident-score aggregation + its join into the
-    # component map — measured ~2% of the 320k link wall (VERDICT r3).
+    # component map — measured ~2% of the 320k link wall.
     link_scores: bool = True
     # connected-components planner cutoff (cc.DRIVER_MAX_EDGES): edge sets
     # at or below this collect to a driver union-find; above it (or with
@@ -115,16 +113,16 @@ class LinkResult:
     edges: DataFrame
     components: DataFrame
     clusters: DataFrame  # mention-level rows with cluster_id (+entity_id)
-    _persisted: list = field(default_factory=list)
+    # what the run materialised in memory: the mentions cache and the
+    # barrier leaves (empty with checkpoint_dir, whose stages are parquet)
+    held: list = field(default_factory=list, repr=False)
 
     def unpersist(self) -> None:
-        """Release every DataFrame this run cached (repeat runs in one
-        session would otherwise accumulate storage)."""
-        for df in [self.mentions, self.surfaces, self.edges, *self._persisted]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        """Free everything this run holds in memory, so repeat runs in one
+        session do not accumulate storage. Without checkpoint_dir every
+        frame of the result, clusters included, is unusable afterwards:
+        the leaves it reads are gone."""
+        release(self.held)
 
     def public_view(self) -> DataFrame:
         """P7 public output projection (sinks.public_projection)."""
@@ -137,6 +135,19 @@ class LinkResult:
         from .sinks import debug_projection
 
         return debug_projection(self.clusters)
+
+
+def release(frames: list) -> None:
+    """Free what each frame holds and empty the list: the cache of a
+    persisted frame, the blocks of a localCheckpoint leaf. A leaf's blocks
+    are its only copy, so anything built on a released leaf cannot run."""
+    for df in frames:
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist()
+    frames.clear()
 
 
 def extract_stage(pages: DataFrame) -> DataFrame:
@@ -181,16 +192,15 @@ def _prefilter_pred():
     return (F.abs(la - lb) * 4 <= F.greatest(la, lb)) & (digits_a == digits_b)
 
 
-def score_pairs(pairs: DataFrame, cfg: LinkConfig,
-                registry: list | None = None) -> DataFrame:
+def score_pairs(pairs: DataFrame, cfg: LinkConfig, registry: list) -> DataFrame:
     """Staged scoring: Jaro-Winkler with a fused vectorized pre-gate (the
     numpy bag+prefix bound inside the Arrow batch cuts the per-row Python
     loop to plausibly-passing pairs only — 62% fewer scored rows at the
-    40k bench, bit-identical edges; VERDICT r2 #3), then the encoder +
-    cosine only for JW survivors — the encoder is the more expensive UDF
-    and must see as few rows as possible.
+    40k bench, bit-identical edges), then the encoder + cosine only for
+    JW survivors — the encoder is the more expensive UDF and must see as
+    few rows as possible.
 
-    Plan shape (measured, round 2): encode the DISTINCT keys of the JW
+    Plan shape (measured): encode the DISTINCT keys of the JW
     survivors once and join the vectors back, rather than encoding both
     keys in place per pair row. The in-place variant was tried and DOUBLED
     total pipeline CPU (359 vs 187 CPU-sec at 40k pages, /proc-accounted):
@@ -198,15 +208,17 @@ def score_pairs(pairs: DataFrame, cfg: LinkConfig,
     amortize across batches/partitions the way a distinct-shuffle does.
     The two equi joins are cheap (the pair table is small after the JW
     filter); this is also the only shape that survives a real transformer
-    encoder. Returns pairs with both scores, filtered to jw >= threshold."""
+    encoder. Returns pairs with both scores, filtered to jw >= threshold.
+    The two frames it persists (JW survivors, key vectors) are appended to
+    `registry`; the caller frees them with release() once the result is
+    materialised."""
     jw_scorer = make_gated_jw_udf(cfg.jw_threshold)
     jw_pass = pairs.withColumn(
         "jw", jw_scorer(F.col("key_a"), F.col("key_b"))
     ).where(F.col("jw") >= cfg.jw_threshold)
     # consumed three times below (two key projections + the join base)
     jw_pass = jw_pass.persist()
-    if registry is not None:
-        registry.append(jw_pass)
+    registry.append(jw_pass)
 
     keys = (
         jw_pass.select(F.col("key_a").alias("key"))
@@ -235,11 +247,10 @@ def score_pairs(pairs: DataFrame, cfg: LinkConfig,
         k_sources = len(variants)
     # emb feeds BOTH pair-side joins below; without a persist the two join
     # builds are distinct physical subtrees (the column renames defeat
-    # exchange reuse) and the encoder ran TWICE over the full distinct-key
-    # set (two ArrowEvalPython nodes in the round-6 'before' edges plan).
+    # exchange reuse) and the encoder would run TWICE over the full
+    # distinct-key set (two ArrowEvalPython nodes in the edges plan).
     emb = emb.persist()
-    if registry is not None:
-        registry.append(emb)
+    registry.append(emb)
     return (
         jw_pass.join(
             emb.withColumnRenamed("key", "key_a").withColumnRenamed("emb", "emb_a"),
@@ -285,7 +296,7 @@ def incident_link_scores(
 
 
 def filter_clusters_by_score(clusters: DataFrame, min_score: float) -> DataFrame:
-    """P6 applied at MENTION level (VERDICT r2 #4): keep rows whose link
+    """P6 applied at MENTION level: keep rows whose link
     confidence reaches min_score; exact-key members (score 1.0) always
     pass."""
     if "link_score" not in clusters.columns:
@@ -311,76 +322,47 @@ def link_pipeline(
         else None
     )
 
-    def stage(name, build, persist=False, storage=None):
+    held: list = []
+
+    def stage(name, build):
+        return ckpt.stage(name, build) if ckpt else build()
+
+    def barrier(name, build):
+        """A stage that later plans read as a leaf. Each barrier output is
+        read by several downstream queries; as a leaf it is computed once
+        (no branch races a cold cache) and its lineage stays out of every
+        later plan, which the driver would otherwise re-analyse per query.
+        Without checkpoint_dir the leaf is a localCheckpoint: its blocks
+        live only on the executors that computed them, so it suits local
+        runs; a cluster run that must survive executor loss passes
+        checkpoint_dir and gets parquet stages."""
         if ckpt:
             return ckpt.stage(name, build)
-        df = build()
-        if persist:
-            # lazy persist: outputs consumed by more than one downstream
-            # scan are cached, but NOT eagerly counted — the pipeline runs
-            # as ONE job wave up to the edge barrier below, so Catalyst/AQE
-            # optimize the full DAG and there are no serial per-stage
-            # barriers capping strong scaling (round-1 lesson).
-            df = df.persist(storage) if storage is not None else df.persist()
+        df = build().localCheckpoint()
+        held.append(df)
         return df
 
-    # language pruning BEFORE extraction: generate_mentions repeats this
-    # filter (harmlessly), but with the extract UDF now non-deterministic
-    # (single-evaluation pin, extract.py) the optimizer will no longer
-    # push a later lang filter below the extraction projection itself —
-    # so prune here and never parse out-of-language HTML at all.
+    # language pruning BEFORE extraction: the extract UDF is
+    # non-deterministic (single-evaluation pin, extract.py), so the
+    # optimizer cannot push a later lang filter below the extraction
+    # projection — prune here and never parse out-of-language HTML.
     src = pages
     if cfg.lang is not None and "lang" in pages.columns:
         src = pages.where(F.col("lang") == cfg.lang)
     docs = stage("extract", lambda: extract_stage(src))
-    # the mention table is the largest intermediate (|mentions| ~ 100x
-    # |pages|); cache it SERIALIZED so holding it through the pair/score
-    # stages doesn't evict their execution memory (measured: deserialized
-    # caching at 320k pages slowed the pair stage ~2x via memory pressure)
-    from pyspark import StorageLevel
-
     mentions = stage(
-        "mentions", lambda: generate_mentions(docs, cfg.windows, cfg.lang),
-        persist=True,
-        storage=StorageLevel.MEMORY_AND_DISK,
+        "mentions", lambda: generate_mentions(docs, cfg.windows, cfg.lang)
     )
-    _COMPRESS_KEY = "spark.sql.inMemoryColumnarStorage.compressed"
-    if not ckpt and cfg.surface_barrier:
-        # barrier 1 of 2, as a localCheckpoint (round 6): the surface
-        # table is scanned by three independent downstream branches (LSH
-        # channel, compact-channel probe, compact-channel build) and its
-        # lineage — the full synth/extract/mention expression forest —
-        # was otherwise re-walked by Catalyst/AQE for EVERY downstream
-        # query (event-log receipt: ~2s driver gap before the edges wave
-        # and ~1.7s before the final wave, pure planning). Eagerly
-        # materializing AND truncating to a leaf here removes that
-        # planning tax (measured −3.5s per 40k link run, identical
-        # clusters), materializes once so the branches can't race a cold
-        # cache, and warms the mentions cache (the groupBy's map side)
-        # for the final cluster-assignment join. Fault-tolerance of this
-        # intermediate is not needed (guide §5): losing an executor
-        # locally means losing the app anyway, and the checkpointed RDD
-        # is freed by the context cleaner when the result is dropped.
-        surfaces = stage("surfaces", lambda: surface_table(mentions))
-        surfaces = surfaces.localCheckpoint()
-    else:
-        # checkpoint-manager mode (parquet-backed stages) or explicit
-        # barrier opt-out: keep the cached-plan shape. The surface cache
-        # is built UNCOMPRESSED per the r5 receipt (the lz4 columnar pass
-        # dominated the stage: 54.2s vs 18.6s at 320k pages; the table is
-        # small relative to mentions). Spark captures this conf per
-        # persist() call, which is what makes per-table scoping possible.
-        _prev_compress = spark.conf.get(_COMPRESS_KEY, "true")
-        spark.conf.set(_COMPRESS_KEY, "false")
-        try:
-            surfaces = stage(
-                "surfaces",
-                lambda: surface_table(mentions),
-                persist=True,
-                storage=StorageLevel.MEMORY_AND_DISK,
-            )
-        finally:
-            spark.conf.set(_COMPRESS_KEY, _prev_compress)
+    if not ckpt:
+        # the mention table is the largest intermediate (|mentions| ~ 100x
+        # |pages|) and is read by the surface groupBy and the cluster
+        # assignment; cached lazily and SERIALIZED so holding it through
+        # the pair/score stages doesn't evict their execution memory
+        # (deserialized caching at 320k pages slowed the pair stage ~2x)
+        mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
+        held.append(mentions)
+    # read by the LSH channel and the compact channel's probe and build
+    surfaces = barrier("surfaces", lambda: surface_table(mentions))
 
     registry: list = []
 
@@ -396,8 +378,7 @@ def link_pipeline(
                 | has_nonkey_chars(F.col("key"))
             )
         # dedup=False on both channels: the union below is deduplicated
-        # once, so the channel-local dropDuplicates shuffles were pure
-        # overhead (two exchanges + stages per run; set unchanged)
+        # once, so channel-local dropDuplicates shuffles would be overhead
         raw = lsh_candidate_pairs(
             linkable,
             num_hashes=cfg.lsh_num_hashes,
@@ -422,23 +403,13 @@ def link_pipeline(
         # difference to ~max/4 — both pure column predicates
         return prefilter_pairs(raw).dropDuplicates(["key_a", "key_b"])
 
-    pairs = stage("pairs", build_pairs)
-    if not ckpt:
-        # third leaf barrier (round 6): the candidate-pair table is tiny
-        # (bounded by the blocking caps) and its dedup exchange is already
-        # a full materialization point, so checkpointing here loses no
-        # stage overlap — but it truncates the LSH/compact forest out of
-        # every scoring-side plan, and in particular out of the TWO
-        # persist() calls in score_pairs, each of which otherwise
-        # physical-plans the whole forest on the driver (measured ~1 s of
-        # pure driver time per link call at steady state).
-        pairs = pairs.localCheckpoint()
-        # the channel internals (bucketed, hit) are only consumed by the
-        # pair build; with pairs materialized they can be released now
-        # rather than after the edge wave
-        for df in registry:
-            df.unpersist()
-        registry.clear()
+    # read by score_pairs' two persists, each of which would otherwise
+    # plan the whole blocking forest on the driver; the pair table is small
+    # (bounded by the blocking caps) and its dedup exchange already
+    # materialises it, so the barrier costs no stage overlap
+    pairs = barrier("pairs", build_pairs)
+    # the channel internals are only read by the pair build
+    release(registry)
 
     def build_edges():
         scored = score_pairs(pairs, cfg, registry=registry)
@@ -446,26 +417,12 @@ def link_pipeline(
             "key_a", "key_b", "jw", "cos"
         )
 
-    n_edges = None
-    if ckpt:
-        # checkpoint-manager mode: parquet-backed stage, already a leaf
-        edges = stage("edges", build_edges, persist=True)
-    else:
-        # the ONE eager barrier, as a localCheckpoint (round 6, same
-        # rationale as the surface barrier): materializing edges runs the
-        # whole extract→mentions→surfaces→pairs→score chain as a single
-        # job wave (populating every cache above). Checkpointing rather
-        # than persist+count truncates the score_pairs expression forest
-        # (pair channels + two UDF joins) out of the THREE downstream
-        # plans that re-embed edges (components, incident scores, cluster
-        # assignment), which Catalyst otherwise re-canonicalizes per
-        # query; the count on the checkpointed leaf is then metadata-cheap
-        # and still feeds connected_components' strategy probe.
-        edges = stage("edges", build_edges).localCheckpoint()
-        n_edges = edges.count()
-    for df in registry:
-        df.unpersist()
-    registry.clear()
+    # read by the components, the incident scores and the cluster assignment
+    edges = barrier("edges", build_edges)
+    release(registry)
+    # a count on the localCheckpoint leaf is metadata-cheap and spares
+    # connected_components its own size probe
+    n_edges = None if ckpt else edges.count()
 
     # CC is shared by the components artifact and the cluster assignment;
     # memoized so checkpoint-resume paths don't run it twice.
@@ -502,7 +459,7 @@ def link_pipeline(
         # full |surfaces| table. AQE picks broadcast when comp fits; at
         # 10^12 docs it degrades gracefully to a shuffle join on key.
         comp = get_comp()
-        # per-mention link confidence (VERDICT r2 #4): best incident edge
+        # per-mention link confidence: best incident edge
         # score for fuzzy-merged surfaces, 1.0 for exact-key members.
         # Plan shape: fuse the incident-score map INTO the component map
         # first (small ⋈ small — inc keys ⊆ comp keys, both edge-derived)
@@ -562,6 +519,7 @@ def link_pipeline(
         edges=edges,
         components=components,
         clusters=clusters,
+        held=held,
     )
 
 

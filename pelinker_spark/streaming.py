@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fsio import fs_exists
 from .mentions import generate_mentions
 from .synth import PAGE_SCHEMA
 
@@ -122,16 +123,6 @@ def streaming_first_seen(
     )
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence check — shared fsio helper (os.path
-    only sees the driver's local disk; on a real cluster the state dirs
-    live on HDFS/S3, where a driver-local isdir is always False and would
-    silently skip scoring or the seen-key anti-join)."""
-    from .fsio import fs_exists
-
-    return fs_exists(spark, path)
-
-
 def _write_batch(
     df: DataFrame, path: str, batch_id: int,
     extra_partition_cols: tuple[str, ...] = (),
@@ -157,9 +148,9 @@ def incremental_link_batch(
     cfg=None,
     batch_id: int = 0,
 ) -> None:
-    """Score ONE micro-batch of never-seen surface keys against the
-    accumulated key state (VERDICT r2 #6 — the consumer of the
-    streaming_first_seen feed).
+    """Score ONE micro-batch of never-seen surface keys (the first-seen
+    feed) against the accumulated key state. Frees the frames it caches
+    before returning, so a long-running stream does not accumulate them.
 
     Incremental blocking invariant: a candidate pair's LATER endpoint is
     new exactly once, so joining the new keys' bucket/compact rows against
@@ -191,7 +182,7 @@ def incremental_link_batch(
     the batch's blocking neighborhood, not to total accumulated state
     (receipts: tools/incremental_bench.py scanned-vs-history rows).
     """
-    from .pipeline import LinkConfig, score_pairs
+    from .pipeline import LinkConfig, release, score_pairs
 
     cfg = cfg or LinkConfig()
     if batch_id <= compacted_upto(spark, out_dir):
@@ -202,15 +193,16 @@ def incremental_link_batch(
         # the compaction watermark advanced. Full no-op.
         return
     nk = new_keys.select("key").dropDuplicates(["key"]).persist()
+    held = [nk]
     _write_incremental_state(nk, out_dir, cfg, batch_id)
     pairs = incremental_candidate_pairs(spark, out_dir, cfg, batch_id)
     edges = (
-        score_pairs(pairs, cfg)
+        score_pairs(pairs, cfg, registry=held)
         .where(F.col("cos") >= cfg.cos_threshold)
         .select("key_a", "key_b", "jw", "cos")
     )
     _write_batch(edges, f"{out_dir}/edges", batch_id)
-    nk.unpersist()
+    release(held)
 
 
 def _write_incremental_state(
@@ -433,7 +425,7 @@ def compacted_upto(spark: SparkSession, out_dir: str) -> int:
     from .fsio import fs_read_text
 
     marker = f"{out_dir}/{_COMPACT_MARKER}"
-    if not _fs_exists(spark, marker):
+    if not fs_exists(spark, marker):
         return BASE_BATCH - 1
     return int(json.loads(fs_read_text(spark, marker))["upto"])
 
@@ -481,7 +473,7 @@ def recover_compaction(spark: SparkSession, out_dir: str) -> bool:
     from .fsio import fs_delete, fs_read_text, fs_write_text_atomic
 
     pending = f"{out_dir}/{_PENDING_MARKER}"
-    if not _fs_exists(spark, pending):
+    if not fs_exists(spark, pending):
         return False
     st = json.loads(fs_read_text(spark, pending))
     upto = int(st["upto"])
@@ -490,7 +482,7 @@ def recover_compaction(spark: SparkSession, out_dir: str) -> bool:
     if edges_upto > BASE_BATCH:
         caps["edges"] = edges_upto
     for table, cap in caps.items():
-        if _fs_exists(spark, f"{out_dir}/.compact_tmp/{table}"):
+        if fs_exists(spark, f"{out_dir}/.compact_tmp/{table}"):
             _swap_in_base(spark, out_dir, table, cap)
         else:
             for d in _batch_dirs_leq(spark, f"{out_dir}/{table}", cap):
@@ -580,7 +572,7 @@ def compact_incremental_state(
 
     # edges cap: never fold a batch the persisted CC map hasn't absorbed
     cc_marker = f"{out_dir}/{_CC_STATE}/{_CC_MARKER}"
-    if _fs_exists(spark, cc_marker):
+    if fs_exists(spark, cc_marker):
         cc_upto = int(json.loads(fs_read_text(spark, cc_marker))["upto"])
         edges_upto = min(upto_batch_id, cc_upto)
     else:
@@ -802,7 +794,7 @@ def incremental_components(spark: SparkSession, out_dir: str) -> DataFrame:
 
     marker = f"{state}/{_CC_MARKER}"
     old_map, upto = None, None
-    if _fs_exists(spark, marker):
+    if fs_exists(spark, marker):
         st = json.loads(fs_read_text(spark, marker))
         old_map, upto = spark.read.parquet(f"{state}/{st['dir']}"), st["upto"]
 
@@ -899,7 +891,7 @@ def run_incremental_link(
     )
     q1.awaitTermination()
 
-    if not _fs_exists(spark, f"{out_dir}/mentions"):
+    if not fs_exists(spark, f"{out_dir}/mentions"):
         return  # empty first drop: nothing ingested, nothing to score
 
     # a previous run may have died mid-compaction; finish the swap before
@@ -937,7 +929,7 @@ def run_incremental_link(
 
         def score_new(batch_df: DataFrame, batch_id: int) -> None:
             nk = batch_df.select("key").dropDuplicates(["key"])
-            if _fs_exists(spark, f"{out_dir}/buckets"):
+            if fs_exists(spark, f"{out_dir}/buckets"):
                 # every key has exactly ONE band-0 row, so the band filter
                 # makes this a one-row-per-seen-key, key-column-pruned scan
                 # (row-group stats prune the other bands) instead of a

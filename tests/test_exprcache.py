@@ -1,4 +1,4 @@
-"""Round-6 expression-cache behavior: static Column fragments are built
+"""Expression-cache behavior: static Column fragments are built
 once per session and reused (pelinker_spark/exprcache.py), and the cached
 builders feed the same operators the parity/oracle tests already gate
 (generate_mentions == HOF frame equality in test_textnorm_mentions;
@@ -25,6 +25,30 @@ def test_session_cached_returns_same_object(spark):
     assert a1 is a2, "same args must hit the cache"
     assert b is not a1
     assert calls == [7, 8], "builder runs once per distinct args"
+
+
+def test_session_cached_rebuilds_for_restarted_context(spark, monkeypatch):
+    """A restarted SparkContext may reuse the old Python object's address;
+    the cache must still treat it as a new context and re-run the builder."""
+    from pyspark import SparkContext
+
+    from pelinker_spark.exprcache import session_cached
+
+    calls = []
+
+    @session_cached
+    def frag(x):
+        calls.append(x)
+        return object()
+
+    first = frag(1)
+    started = spark.sparkContext.startTime
+    # same Python object, new context identity
+    monkeypatch.setattr(SparkContext, "startTime", property(lambda sc: started + 1))
+    second = frag(1)
+    assert second is not first
+    assert frag(1) is second
+    assert calls == [1, 1]
 
 
 def test_mention_fragments_cached_and_reusable(spark):

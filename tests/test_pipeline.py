@@ -301,3 +301,40 @@ def test_link_scores_flag_off(spark):
     finally:
         full.unpersist()
         bare.unpersist()
+
+
+def _held_in_memory(spark):
+    """(persistent RDDs, CacheManager entries) registered in the session."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    return rdds.size(), cache.cachedData().size()
+
+
+def test_unpersist_releases_everything_the_run_held(spark, tmp_path):
+    """After LinkResult.unpersist() the session holds no more cached plans
+    or persistent RDDs (localCheckpoint leaves included) than before the
+    run, with and without checkpoint_dir."""
+    pages = web_pages(spark, 100, seed=7, n_entities=12, partitions=4)
+    for ckpt in (None, str(tmp_path / "ckpt")):
+        before = _held_in_memory(spark)
+        res = link_pipeline(spark, pages, checkpoint_dir=ckpt)
+        res.public_view().write.format("noop").mode("overwrite").save()
+        res.unpersist()
+        assert _held_in_memory(spark) == before, ckpt
+
+
+def test_incremental_batches_release_their_caches(spark, tmp_path):
+    """Each incremental_link_batch frees the frames it persists: the
+    session's cache does not grow from batch to batch."""
+    from pelinker_spark.mentions import generate_mentions
+    from pelinker_spark.streaming import incremental_link_batch
+
+    pages = web_pages(spark, 60, seed=5, n_entities=10, partitions=2)
+    keys = generate_mentions(pages).select("key").distinct()
+    out = str(tmp_path / "inc")
+    before = _held_in_memory(spark)
+    for b in range(3):
+        batch = keys.where(F.pmod(F.xxhash64("key"), F.lit(3)) == b)
+        incremental_link_batch(spark, batch, out, batch_id=b)
+        assert _held_in_memory(spark) == before, b
+    assert spark.read.parquet(f"{out}/edges").count() > 0
