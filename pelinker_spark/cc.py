@@ -23,53 +23,36 @@ real engine makes):
   the path-compression trick from the MapReduce-CC literature
   (large-star/small-star family), giving O(log diameter) rounds instead
   of plain hash-min's O(diameter). Two shuffles per round on the node
-  key; stop at fixpoint; lazy localCheckpoint truncates lineage and the
-  convergence count materializes it in one action (SURVEY.md §4).
+  key; stop at fixpoint. Each round's labels are a localCheckpoint leaf
+  whose materializing job also counts the changed labels (an observed
+  metric, SURVEY.md §4); the superseded leaf is released at once, so the
+  call leaves only the returned leaf, which the caller frees with
+  pipeline.release().
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DRIVER_MAX_EDGES = 1_000_000
 
 
-def _driver_union_find(edge_rows: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Path-compressed union-find; root relabeled to min member key."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in edge_rows:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return [(k, find(k)) for k in set(parent) | {b for _, b in edge_rows} | {a for a, _ in edge_rows}]
-
-
 def _driver_union_find_np(ka, kb):
     """Vectorized driver union-find over numpy string arrays.
 
-    Sits on the SERIAL driver path of every link run, so its wall-clock
-    is a direct Amdahl tax on the N→4N scaling-efficiency bar: string
-    keys are mapped to SORTED integer codes (np.unique + searchsorted —
-    code order == lexicographic order, so min code == min key and
-    union-by-min keeps every root at its set's minimum), the union loop
-    runs over plain int lists with path halving (no per-edge string
-    hashing), and the final relabel is a vectorized parent[parent]
-    fixpoint (O(log depth) full-array passes) instead of a per-key find
-    loop. Returns a pandas DataFrame (key, component) covering exactly
-    the keys that appear in edges — same contract as
-    _driver_union_find."""
+    Sits on the serial driver path of every link run, so its wall-clock
+    adds directly to the run: string keys are mapped to SORTED integer
+    codes (np.unique + searchsorted — code order == lexicographic order,
+    so min code == min key and union-by-min keeps every root at its set's
+    minimum), the union loop runs over plain int lists with path halving
+    (no per-edge string hashing), and the final relabel is a vectorized
+    parent[parent] fixpoint (O(log depth) full-array passes) instead of a
+    per-key find loop. Returns a pandas DataFrame (key, component)
+    covering exactly the keys that appear in edges, component being the
+    lexicographically smallest member key."""
     import numpy as np
     import pandas as pd
 
@@ -114,7 +97,8 @@ def connected_components(
     observability (bench receipts). Callers that already know the exact
     edge count (link_pipeline materializes edges with a count() barrier
     right before calling) pass it as `n_edges` so the strategy probe costs
-    no extra job."""
+    no extra job. The distributed path returns a localCheckpoint leaf: the
+    caller frees it with pipeline.release() when done with the labels."""
     spark = edges.sparkSession
     # Strategy probe in two steps (VERDICT r4 #5): a count-only probe of
     # at most driver_max_edges+1 rows decides the path — when the edge
@@ -150,6 +134,8 @@ def connected_components(
             # Arrow path back to the JVM for the same reason as the fetch
             return spark.createDataFrame(out, schema)
         return spark.createDataFrame([], schema)
+
+    from .pipeline import release
 
     # pre-shuffle the (constant) symmetric edge table once on the probe key
     # so the per-iteration join only shuffles the (shrinking-churn) label
@@ -202,6 +188,7 @@ def connected_components(
         lut = prop.select(
             F.col("key").alias("c_key"), F.col("component").alias("c_comp")
         )
+        changed = Observation()
         new_comp = (
             prop.join(lut, prop.component == lut.c_key, "left")
             .select(
@@ -209,24 +196,29 @@ def connected_components(
                 F.coalesce(F.col("c_comp"), F.col("component")).alias(
                     "component"
                 ),
-                (
-                    F.coalesce(F.col("c_comp"), F.col("component"))
-                    < F.col("old_component")
-                ).alias("changed"),
+                "old_component",
             )
+            .observe(
+                changed,
+                F.count_if(F.col("component") < F.col("old_component")).alias("n"),
+            )
+            .drop("old_component")
         )
-        # lazy localCheckpoint: the count() below materializes the iteration
-        # (truncating lineage) AND measures convergence in ONE action
-        new_comp = new_comp.localCheckpoint(eager=False)
-        n_changed = new_comp.where(F.col("changed")).count()
+        # the eager localCheckpoint materializes the iteration (truncating
+        # lineage) and its observed metric measures convergence in the
+        # same job; the returned leaf is the bare (key, component) table
+        new_comp = new_comp.localCheckpoint()
+        n_changed = changed.get["n"]
         prop.unpersist()  # new_comp is materialized; the round's scratch can go
-        comp = new_comp.drop("changed")
+        release([comp])  # a superseded leaf is read by nothing
+        comp = new_comp
         if n_changed == 0:
             break
     else:
         # Unconverged components would silently split clusters; refuse to
-        # return wrong labels (ADVICE r1).
+        # return wrong labels.
         sym.unpersist()
+        release([comp])
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
             f"iterations ({n_changed} labels still changing); "

@@ -29,8 +29,11 @@ T = TypeVar("T")
 def session_cached(fn: Callable[..., T]) -> Callable[..., T]:
     """Memoize `fn(*args)` per (active SparkContext, args).
 
-    args must be hashable; the returned value must be immutable/reusable
-    (unresolved Columns and tuples of them are)."""
+    Arguments are positional only (keyword arguments are not accepted)
+    and must be hashable; the returned value must be immutable/reusable
+    (unresolved Columns and tuples of them are). Two threads that build
+    the same key at once both run `fn` and the later store wins; the race
+    is benign because both builds yield equal Columns."""
     cache: dict = {}
 
     @functools.wraps(fn)

@@ -1,7 +1,8 @@
 """Filesystem-agnostic small-file IO via the Hadoop FileSystem API.
 
-Checkpoint markers (`_SUCCESS`, `_FINGERPRINT`), model-selection unit
-markers, and run-summary JSON must live NEXT TO the parquet state they
+Checkpoint markers (`_SUCCESS`, the `_CHECKPOINT` stage record),
+model-selection unit markers, run-summary JSON and the parquet footers a
+stage record is built from live NEXT TO the parquet state they
 describe — which on a real cluster is HDFS/S3/Iceberg-warehouse storage,
 not the driver's local disk. `os.path.exists`/`open()` silently return
 False / fail there, which turns completed-set resume into a full recompute
@@ -11,9 +12,9 @@ write in the engine routes through these helpers, which resolve the
 filesystem FROM the path's scheme (file://, hdfs://, s3a://, bare local)
 exactly like Spark's own writers do.
 
-Costs: one JVM round-trip per call — negligible against the stage writes
-they guard. No data-plane bytes move through the driver except the
-small marker/summary payloads themselves.
+Costs: one JVM round-trip per call (per file for footers) — negligible
+against the stage writes they guard. No data-plane bytes move through the
+driver except the small marker/summary payloads and parquet footers.
 """
 
 from __future__ import annotations
@@ -68,6 +69,31 @@ def fs_list_subdirs(spark: SparkSession, path: str) -> list[str]:
         for st in fs.listStatus(jpath)
         if st.isDirectory()
     )
+
+
+def fs_parquet_part_rows(spark: SparkSession, path: str) -> list[list[int]]:
+    """[[partition_id, n_rows], ...] of a parquet directory written by
+    Spark, sorted by partition id: each `part-NNNNN-*` file's row count
+    read from its footer on the driver (no Spark job). NNNNN is the number
+    of the write task that produced the file; a task that split its output
+    over several files contributes their sum."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    fs, jpath = _fs_and_path(spark, path)
+    rows: dict[int, int] = {}
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if not name.startswith("part-"):
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
+        )
+        try:
+            pid = int(name.split("-")[1])
+            rows[pid] = rows.get(pid, 0) + reader.getRecordCount()
+        finally:
+            reader.close()
+    return [[pid, n] for pid, n in sorted(rows.items())]
 
 
 def fs_read_text(spark: SparkSession, path: str) -> str:

@@ -23,13 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .exprcache import session_cached
-from .textnorm import (
-    STOPWORDS,
-    blocking_key_col,
-    norm_token_col,
-    tokenize_col,
-    window_is_valid_col,
-)
+from .textnorm import STOPWORDS, blocking_key_col, norm_token_col
 
 MAX_WINDOW = 3  # W1/W2/W3 — reference pelinker/onto.py:12-16
 
@@ -78,10 +72,10 @@ def generate_mentions(pages: DataFrame, windows: tuple[int, ...] = (1, 2, 3),
     zipped struct, so every per-token expression downstream is a *scalar*
     (whole-stage-codegen'd). No window function (no shuffle — unlike a
     lead() formulation) and no per-window interpreted transform() lambdas
-    (unlike the HOF formulation in generate_mentions_hof: higher-order
-    lambdas are interpreted, ~20x slower per element). The only remaining
-    interpreted aggregates are the two _starts running sums, linear per
-    sentence.
+    (unlike the HOF formulation the tests keep as its parity oracle:
+    higher-order lambdas are interpreted, ~20x slower per element). The
+    only remaining interpreted aggregates are the two _starts running
+    sums, linear per sentence.
     """
     for w in windows:
         assert 1 <= w <= MAX_WINDOW, "windows limited to W1/W2/W3"
@@ -123,8 +117,8 @@ def generate_mentions(pages: DataFrame, windows: tuple[int, ...] = (1, 2, 3),
     # elements per sentence.) b2/b3 are null for windows past the sentence
     # tail (len(null)), exactly where the w-struct's in_range gate already
     # discards them, so emitted values are identical (parity-tested
-    # against generate_mentions_hof and oracle q53; noop-isolated A/B at
-    # 40k pages: 1.4 -> 1.2 s steady).
+    # against the tests' HOF formulation and oracle q53; noop-isolated
+    # A/B at 40k pages: 1.4 -> 1.2 s steady).
     df = df.select(*c_b1).select(*c_ab2).select(*c_b3n)
 
     # per-token keep-predicate atoms, projected ONCE (round 6): the three
@@ -271,102 +265,6 @@ def _mention_plan_cols(windows: tuple, extra_cols: tuple):
     return (
         c_sents, c_explode1, c_post1, c_toks, c_explode2,
         c_b1, c_ab2, c_b3n, c_nens, c_wexplode, c_final,
-    )
-
-
-def generate_mentions_hof(pages: DataFrame, windows: tuple[int, ...] = (1, 2, 3),
-                          lang: str | None = "en",
-                          extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """The original higher-order-function formulation, kept as the parity
-    oracle for generate_mentions (tests assert exact frame equality).
-    Slower: the per-window transform/slice/struct lambdas are interpreted
-    per element, not codegen'd."""
-    df = pages
-    if lang is not None and "lang" in df.columns:
-        df = df.where(F.col("lang") == lang)
-
-    df = df.select(
-        "url",
-        *extra_cols,
-        F.lit(0).cast("long").alias("itext"),
-        split_sentences(normalize_ws(F.col("text"))).alias("sents"),
-    )
-    # doc-global offset of each sentence (array-side running sum, no shuffle);
-    # _starts yields n+1 entries — slice to n so arrays_zip stays aligned
-    df = df.select(
-        "url",
-        *extra_cols,
-        "itext",
-        F.posexplode(
-            F.arrays_zip(
-                F.col("sents"),
-                F.slice(_starts(F.col("sents")), 1, F.size("sents")).alias("soff"),
-            )
-        ).alias("ichunk", "z"),
-    ).select(
-        "url",
-        *extra_cols,
-        "itext",
-        F.col("ichunk").cast("long").alias("ichunk"),
-        F.col("z.sents").alias("sent"),
-        F.col("z.soff").alias("sent_off"),
-    )
-
-    toks = tokenize_col(F.col("sent"))
-    df = df.select(
-        "url", *extra_cols, "itext", "ichunk", "sent_off",
-        toks.alias("toks"),
-        _starts(toks).alias("tstarts"),
-    )
-
-    # one struct per (window width, start index), flattened then exploded.
-    # NB: the lambda must be unary — a second parameter would be bound by
-    # Spark to the element index (binary transform form), so capture w via
-    # a closure factory.
-    def _window_struct(w: int):
-        def fn(i):
-            return F.struct(
-                F.lit(w).alias("wg"),
-                F.array_join(F.slice("toks", i + 1, w), " ").alias("mention"),
-                F.transform(F.slice("toks", i + 1, w), norm_token_col).alias("normed"),
-                F.element_at("tstarts", i + 1).cast("long").alias("a"),
-                (F.element_at("tstarts", i + F.lit(w) + 1) - F.lit(1)).cast("long").alias("b"),
-            )
-
-        return fn
-
-    win_arrays = []
-    for w in windows:
-        win = F.when(
-            F.size("toks") >= w,
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - F.lit(w)), _window_struct(w)
-            ),
-        ).otherwise(F.array().cast(
-            "array<struct<wg:int,mention:string,normed:array<string>,a:bigint,b:bigint>>"
-        ))
-        win_arrays.append(win)
-
-    df = df.select(
-        "url", *extra_cols, "itext", "ichunk", "sent_off",
-        F.explode(F.flatten(F.array(*win_arrays))).alias("m"),
-    )
-
-    return (
-        df.where(window_is_valid_col(F.col("m.normed")))
-        .select(
-            "url",
-            *extra_cols,
-            "itext",
-            "ichunk",
-            F.col("m.wg").alias("wg"),
-            F.col("m.mention").alias("mention"),
-            blocking_key_col(F.col("m.normed")).alias("key"),
-            F.col("m.a").alias("a"),
-            F.col("m.b").alias("b"),
-            (F.col("sent_off") + F.col("m.a")).cast("long").alias("a_abs"),
-            (F.col("sent_off") + F.col("m.b")).cast("long").alias("b_abs"),
-        )
     )
 
 

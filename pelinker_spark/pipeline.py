@@ -113,8 +113,9 @@ class LinkResult:
     edges: DataFrame
     components: DataFrame
     clusters: DataFrame  # mention-level rows with cluster_id (+entity_id)
-    # what the run materialised in memory: the mentions cache and the
-    # barrier leaves (empty with checkpoint_dir, whose stages are parquet)
+    # what the run materialised in memory: the mentions cache, the
+    # barrier leaves and the components leaf (with checkpoint_dir, whose
+    # stages are parquet, only the components leaf)
     held: list = field(default_factory=list, repr=False)
 
     def unpersist(self) -> None:
@@ -420,9 +421,9 @@ def link_pipeline(
     # read by the components, the incident scores and the cluster assignment
     edges = barrier("edges", build_edges)
     release(registry)
-    # a count on the localCheckpoint leaf is metadata-cheap and spares
-    # connected_components its own size probe
-    n_edges = None if ckpt else edges.count()
+    # the stage record (or a count on the localCheckpoint leaf, which is
+    # metadata-cheap) spares connected_components its own size probe
+    n_edges = ckpt.rows("edges") if ckpt else edges.count()
 
     # CC is shared by the components artifact and the cluster assignment;
     # memoized so checkpoint-resume paths don't run it twice.
@@ -437,6 +438,8 @@ def link_pipeline(
                 driver_max_edges=cfg.cc_driver_max_edges,
                 n_edges=n_edges,
             )
+            # the distributed path returns a localCheckpoint leaf
+            held.append(comp_memo["df"])
         return comp_memo["df"]
 
     def build_components():

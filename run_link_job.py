@@ -19,8 +19,11 @@ Cluster deployment (the north-rule run mode):
 
 No master/cores are set here — the session comes from spark-submit, so the
 same file runs on local[N], YARN, or K8s unchanged. The checkpoint dir
-makes any stage resumable mid-run (fingerprinted on config + input
-identity); metrics rows land under <checkpoint-dir>/_metrics.
+makes any stage resumable mid-run: each stage is parquet under
+<checkpoint-dir>/<stage>/, committed by a _CHECKPOINT record that holds
+the run fingerprint (config + input identity), the schema and the
+per-partition row counts from which CheckpointManager.metrics() builds
+its rows.
 """
 
 from __future__ import annotations

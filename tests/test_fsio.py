@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import glob
 import os
+import uuid
 
 from pyspark.sql import functions as F
 
 from pelinker_spark.fsio import (
+    fs_delete,
     fs_exists,
     fs_mkdirs,
     fs_read_text,
@@ -102,3 +104,100 @@ def test_model_selection_resume_on_uri_root(spark, tmp_path):
     assert before == after, "completed units re-ran on URI-root resume"
     assert out2["winner"]["config_id"] == out["winner"]["config_id"]
     pages.unpersist()
+
+
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted in a job group of its
+    own once the listener bus has delivered every job start."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_stage_runs_only_its_write(spark, tmp_path):
+    """A built stage runs the jobs of its parquet write and no more; a
+    resumed stage and metrics() run none before an action, and the
+    resumed frame has the schema parquet inference would give."""
+    from pelinker_spark.checkpoint import CheckpointManager
+
+    def frame():
+        return spark.range(1000).repartition(4).withColumn("v", F.lit(1))
+
+    _, bare = _jobs_in(spark, lambda: frame().write.parquet(str(tmp_path / "bare")))
+    root = str(tmp_path / "ckpt")
+    ck = CheckpointManager(spark, root, {"cfg": 1})
+    _, built = _jobs_in(spark, lambda: ck.stage("s", frame))
+    assert built == bare >= 1
+
+    def never():
+        raise AssertionError("complete stage rebuilt")
+
+    ck2 = CheckpointManager(spark, root, {"cfg": 1})
+    (out, m), resumed = _jobs_in(spark, lambda: (ck2.stage("s", never), ck2.metrics()))
+    assert resumed == 0
+    assert out.schema == spark.read.parquet(f"{root}/s").schema
+    assert ck2.rows("s") == out.count() == 1000
+    assert m.columns == ["run_fingerprint", "stage", "partition_id", "n_rows",
+                         "wall_ms", "status", "updated_at"]
+
+
+def test_checkpoint_metrics_sum_to_stage_counts(spark, tmp_path):
+    """Per stage, the footer row counts in metrics() and rows() sum to
+    the stage's count(), for shuffled, aggregated and empty outputs."""
+    from pelinker_spark.checkpoint import CheckpointManager
+
+    ck = CheckpointManager(spark, str(tmp_path / "ckpt"), {"cfg": 1})
+    builds = {
+        "ranged": lambda: spark.range(1000).repartition(4),
+        "grouped": lambda: spark.range(500).groupBy((F.col("id") % 37).alias("k")).count(),
+        "empty": lambda: spark.range(10).where("id < 0"),
+    }
+    outs = {name: ck.stage(name, build) for name, build in builds.items()}
+    sums = {
+        r["stage"]: r["n"]
+        for r in ck.metrics().groupBy("stage").agg(F.sum("n_rows").alias("n")).collect()
+    }
+    assert sums == {name: out.count() for name, out in outs.items()}
+    assert {name: ck.rows(name) for name in builds} == sums
+
+
+def test_checkpoint_rebuilds_old_layout_and_damaged_records(spark, tmp_path):
+    """A stage directory without a readable record of this run (the old
+    bare _FINGERPRINT marker, unparseable JSON, a record missing fields,
+    bytes that fail their checksum) is rebuilt, and metrics() skips it."""
+    from pelinker_spark.checkpoint import CheckpointManager
+
+    root = str(tmp_path / "ckpt")
+    record = f"{root}/s/_CHECKPOINT"
+    on_disk = tmp_path / "ckpt" / "s" / "_CHECKPOINT"
+    builds = []
+
+    def run():
+        ck = CheckpointManager(spark, root, {"cfg": 1})
+        out = ck.stage("s", lambda: (builds.append(1), spark.range(10))[1])
+        assert out.count() == 10
+        return ck
+
+    fp = run().fingerprint
+    damage = [
+        lambda: (fs_delete(spark, record), fs_write_text_atomic(spark, f"{root}/s/_FINGERPRINT", fp)),
+        lambda: fs_write_text_atomic(spark, record, '{"fingerprint": "' + fp),
+        lambda: fs_write_text_atomic(spark, record, '{"fingerprint": "%s"}' % fp),
+        # a valid record whose bytes no longer match their checksum file
+        lambda: on_disk.write_text(on_disk.read_text() + " "),
+    ]
+    for i, damage_record in enumerate(damage):
+        damage_record()
+        assert CheckpointManager(spark, root, {"cfg": 1}).metrics().count() == 0, i
+        run()
+        assert len(builds) == i + 2, i
+    assert not fs_exists(spark, f"{root}/s/_FINGERPRINT")
+    run()  # the rebuilt stage resumes
+    assert len(builds) == len(damage) + 1

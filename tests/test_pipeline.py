@@ -11,6 +11,7 @@ from pelinker_spark.pipeline import (
     LinkConfig,
     evaluate_against_gold,
     link_pipeline,
+    release,
 )
 from pelinker_spark.scoring import _jaro_winkler, cosine_col, encode_udf
 from pelinker_spark.synth import gold_mentions, kb_table, web_pages
@@ -125,6 +126,26 @@ def test_connected_components_transitive(spark):
     assert comp["a"] != comp["x"]
 
 
+def _driver_union_find(edge_rows: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Path-compressed union-find; root relabeled to min member key (the
+    dict-based parity oracle for cc._driver_union_find_np)."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in edge_rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(k, find(k)) for k in set(parent) | {b for _, b in edge_rows} | {a for a, _ in edge_rows}]
+
+
 def test_driver_union_find_vectorized_parity():
     """The round-4 vectorized driver union-find (int codes + path halving
     + parent[parent] fixpoint) must return exactly the dict-based
@@ -133,7 +154,7 @@ def test_driver_union_find_vectorized_parity():
     shuffling."""
     import numpy as np
 
-    from pelinker_spark.cc import _driver_union_find, _driver_union_find_np
+    from pelinker_spark.cc import _driver_union_find_np
 
     rng = np.random.default_rng(7)
     keys = np.array([f"k{i:05d}" for i in rng.permutation(5000)])
@@ -338,3 +359,19 @@ def test_incremental_batches_release_their_caches(spark, tmp_path):
         incremental_link_batch(spark, batch, out, batch_id=b)
         assert _held_in_memory(spark) == before, b
     assert spark.read.parquet(f"{out}/edges").count() > 0
+
+
+def test_distributed_components_hold_only_the_returned_leaf(spark):
+    """The distributed CC path frees each superseded label leaf: after the
+    call the session holds at most the returned leaf, and releasing that
+    leaves it as before."""
+    keys = [f"k{i:03d}" for i in range(41)]
+    edges = spark.createDataFrame(pd.DataFrame({"src": keys[:-1], "dst": keys[1:]}))
+    before = _held_in_memory(spark)
+    stats: dict = {}
+    comp = connected_components(edges, driver_max_edges=0, stats=stats)
+    assert {r["component"] for r in comp.collect()} == {"k000"}
+    assert stats["path"] == "distributed" and stats["iterations"] > 2
+    assert _held_in_memory(spark)[0] <= before[0] + 1
+    release([comp])
+    assert _held_in_memory(spark) == before

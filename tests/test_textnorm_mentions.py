@@ -6,8 +6,20 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from pelinker_spark import textnorm
-from pelinker_spark.mentions import generate_mentions, kb_blocking_keys
+from pelinker_spark.mentions import (
+    _starts,
+    generate_mentions,
+    kb_blocking_keys,
+    normalize_ws,
+    split_sentences,
+)
 from pelinker_spark.synth import gold_mentions, kb_table, web_pages
+from pelinker_spark.textnorm import (
+    blocking_key_col,
+    norm_token_col,
+    tokenize_col,
+    window_is_valid_col,
+)
 
 
 def test_norm_token_rules():
@@ -71,13 +83,107 @@ def test_mention_spans_exact(spark):
     assert "kinase activate receptor" in set(m[m.wg == 3].key)
 
 
+def generate_mentions_hof(pages: DataFrame, windows: tuple[int, ...] = (1, 2, 3),
+                          lang: str | None = "en",
+                          extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """The original higher-order-function formulation, kept as the parity
+    oracle for generate_mentions (tests assert exact frame equality).
+    Slower: the per-window transform/slice/struct lambdas are interpreted
+    per element, not codegen'd."""
+    df = pages
+    if lang is not None and "lang" in df.columns:
+        df = df.where(F.col("lang") == lang)
+
+    df = df.select(
+        "url",
+        *extra_cols,
+        F.lit(0).cast("long").alias("itext"),
+        split_sentences(normalize_ws(F.col("text"))).alias("sents"),
+    )
+    # doc-global offset of each sentence (array-side running sum, no shuffle);
+    # _starts yields n+1 entries — slice to n so arrays_zip stays aligned
+    df = df.select(
+        "url",
+        *extra_cols,
+        "itext",
+        F.posexplode(
+            F.arrays_zip(
+                F.col("sents"),
+                F.slice(_starts(F.col("sents")), 1, F.size("sents")).alias("soff"),
+            )
+        ).alias("ichunk", "z"),
+    ).select(
+        "url",
+        *extra_cols,
+        "itext",
+        F.col("ichunk").cast("long").alias("ichunk"),
+        F.col("z.sents").alias("sent"),
+        F.col("z.soff").alias("sent_off"),
+    )
+
+    toks = tokenize_col(F.col("sent"))
+    df = df.select(
+        "url", *extra_cols, "itext", "ichunk", "sent_off",
+        toks.alias("toks"),
+        _starts(toks).alias("tstarts"),
+    )
+
+    # one struct per (window width, start index), flattened then exploded.
+    # NB: the lambda must be unary — a second parameter would be bound by
+    # Spark to the element index (binary transform form), so capture w via
+    # a closure factory.
+    def _window_struct(w: int):
+        def fn(i):
+            return F.struct(
+                F.lit(w).alias("wg"),
+                F.array_join(F.slice("toks", i + 1, w), " ").alias("mention"),
+                F.transform(F.slice("toks", i + 1, w), norm_token_col).alias("normed"),
+                F.element_at("tstarts", i + 1).cast("long").alias("a"),
+                (F.element_at("tstarts", i + F.lit(w) + 1) - F.lit(1)).cast("long").alias("b"),
+            )
+
+        return fn
+
+    win_arrays = []
+    for w in windows:
+        win = F.when(
+            F.size("toks") >= w,
+            F.transform(
+                F.sequence(F.lit(0), F.size("toks") - F.lit(w)), _window_struct(w)
+            ),
+        ).otherwise(F.array().cast(
+            "array<struct<wg:int,mention:string,normed:array<string>,a:bigint,b:bigint>>"
+        ))
+        win_arrays.append(win)
+
+    df = df.select(
+        "url", *extra_cols, "itext", "ichunk", "sent_off",
+        F.explode(F.flatten(F.array(*win_arrays))).alias("m"),
+    )
+
+    return (
+        df.where(window_is_valid_col(F.col("m.normed")))
+        .select(
+            "url",
+            *extra_cols,
+            "itext",
+            "ichunk",
+            F.col("m.wg").alias("wg"),
+            F.col("m.mention").alias("mention"),
+            blocking_key_col(F.col("m.normed")).alias("key"),
+            F.col("m.a").alias("a"),
+            F.col("m.b").alias("b"),
+            (F.col("sent_off") + F.col("m.a")).cast("long").alias("a_abs"),
+            (F.col("sent_off") + F.col("m.b")).cast("long").alias("b_abs"),
+        )
+    )
+
+
 def test_generate_mentions_hof_parity(spark):
     """The rewritten zipped-slice generate_mentions must produce EXACTLY
     the rows of the original HOF formulation (its parity oracle) on
     realistic synthetic pages — the docstring claims this test (ADVICE
     r2: the claim was unguarded)."""
-    from pelinker_spark.mentions import generate_mentions_hof
-
     pages = web_pages(spark, 40, seed=5, n_entities=12, partitions=4)
     cols = ["url", "itext", "ichunk", "wg", "mention", "key",
             "a", "b", "a_abs", "b_abs"]
