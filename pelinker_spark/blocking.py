@@ -13,13 +13,20 @@ minhash via xxhash64 with per-hash seeds + array_min, bands via hashing
 minhash slices — no Python, no ml.feature stage (those require Vector
 columns and a fit step; this formulation is stateless and streams).
 
+Both channels, in batch and in the incremental path, enumerate pairs
+through one kernel, block_pairs: a block is an LSH bucket or a compact
+group, and the incremental path's "new key × accumulated history" join is
+the same kernel with a predicate that keeps pairs touching a new key.
+
 Skew: head surface-form keys (stopword-ish unigrams) produce giant blocks.
-Defused by (a) per-band block cap via row_number over a deterministic
-xxhash64 order — the reference's per-entity cap W1 (pelinker/sampling.py:
-101-153) re-expressed, and (b) AQE skew-join splitting for the joins.
+Blocks over the cap are dropped whole (stop-blocks), or in salt mode the
+mid-sized ones are enumerated over salted shuffle cells
+(salted_block_pairs, salted_cross_pairs).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -169,10 +176,9 @@ def lsh_candidate_pairs(
     """Distinct-surface table → candidate pairs (key_a, key_b), key_a < key_b.
 
     surfaces must have one row per distinct `key_col`. Pairs are generated
-    within LSH buckets; buckets larger than max_block are handled per
-    hot_bucket_mode (below) so a degenerate bucket can't put its quadratic
-    pair work on one reduce task. Self-joins use the (band, bh) equi-key,
-    so Catalyst shuffles once on the bucket id.
+    within LSH buckets by the block_pairs kernel; buckets larger than
+    max_block are handled per hot_bucket_mode (below) so a degenerate
+    bucket can't put its quadratic pair work on one reduce task.
 
     hot_bucket_mode:
       "drop" (default) — oversized buckets are stop-buckets
@@ -192,67 +198,33 @@ def lsh_candidate_pairs(
     """
     assert hot_bucket_mode in ("drop", "salt")
     bucketed = lsh_buckets(surfaces, key_col, num_hashes, bands, rows)
-    # word grouping, computed ONCE per bucket-membership row (round 6):
-    # the WordGrouping blocking dimension (pelinker/onto.py:247-252 — an
-    # n-word surface never links to an m-word surface) used to be a
-    # post-join filter running size(split(...)) on BOTH sides of every
-    # generated pair row (~2x|raw pairs| regex splits); deriving it here
-    # and joining on it instead produces the exact same pair set while
-    # never generating the cross-width pairs at all. Bucket-size caps
-    # still count the whole (band, bh) bucket, as before.
-    bucketed = bucketed.withColumn(
-        "wg", F.size(F.split(F.col(key_col), " "))
+    # the word count rides on each bucket-membership row, so the kernel
+    # never generates cross-width pairs (WordGrouping, pelinker/onto.py:
+    # 247-252: an n-word surface never links to an m-word one); bucket
+    # caps still count the whole (band, bh) bucket
+    bucketed = bucketed.select(
+        "band", "bh", F.col(key_col).alias("key"),
+        F.size(F.split(F.col(key_col), " ")).alias("wg"),
     )
-    # the bucket table feeds both the size aggregation and the semi-join
-    # probe (and the hot path in salt mode) — without materialization the
+    # the bucket table feeds the kernel's size aggregation and its semi
+    # join (and the hot path in salt mode) — without materialization the
     # minhash lineage recomputes up to 3x
     bucketed = bucketed.persist()
     if registry is not None:
         registry.append(bucketed)
-    sizes = bucketed.groupBy("band", "bh").agg(F.count("*").alias("bn"))
-    cold = bucketed.join(
-        sizes.where(F.col("bn") <= max_block).select("band", "bh"),
-        ["band", "bh"],
-        "left_semi",
-    )
-    # In-bucket pair enumeration via ONE groupBy + in-row double explode
-    # (round 6): collecting each capped bucket's members into an array and
-    # expanding pairs row-side replaces the (a x b) self-join — two
-    # exchanges of the full bucket-membership table plus a hash join —
-    # with a single exchange and codegen'd explodes. Safe by construction:
-    # only buckets already capped to max_block rows are collected, so no
-    # aggregation buffer can exceed max_block entries regardless of how
-    # degenerate a raw bucket is (giant buckets were excluded by the
-    # semi join above, exactly as before). Pair set is identical
-    # (parity-verified against the self-join form, both hot modes).
-    g = cold.groupBy("band", "bh").agg(
-        F.collect_list(F.struct("wg", F.col(key_col).alias("k"))).alias("ms")
-    )
-    raw = (
-        g.select(F.explode("ms").alias("x"), "ms")
-        .select("x", F.explode("ms").alias("y"))
-        .where(
-            (F.col("x.wg") == F.col("y.wg")) & (F.col("x.k") < F.col("y.k"))
-        )
-        .select(F.col("x.k").alias("key_a"), F.col("y.k").alias("key_b"))
-    )
+    raw, sizes = block_pairs(bucketed, ["band", "bh"], max_block)
     if hot_bucket_mode == "salt":
-        stop = stop_block if stop_block is not None else max_block * 40
-        hot = bucketed.join(
-            sizes.where((F.col("bn") > max_block) & (F.col("bn") <= stop))
-            .select("band", "bh"),
-            ["band", "bh"],
-            "left_semi",
+        hot = hot_block_members(
+            bucketed, sizes, ["band", "bh"], max_block, stop_block
         )
         raw = raw.unionByName(
-            salted_block_pairs(
-                hot, ["band", "bh", "wg"], key_col, hot_salts
-            ).select("key_a", "key_b")
+            salted_block_pairs(hot, ["band", "bh", "wg"], "key", hot_salts)
+            .select("key_a", "key_b")
         )
     # dedup=False lets a caller that deduplicates the UNION of several
-    # channels anyway (link_pipeline) skip this extra shuffle — a pair
-    # duplicated across bands reaches the caller multiply but the final
-    # dropDuplicates yields the identical set (round 6).
+    # channels anyway (link_pipeline) skip this extra shuffle: a pair
+    # found in several bands reaches it several times, and its own
+    # dropDuplicates yields the identical set
     return raw.dropDuplicates(["key_a", "key_b"]) if dedup else raw
 
 
@@ -263,56 +235,102 @@ def compact_key_pairs(
     """Deterministic third blocking channel: surfaces whose keys become
     equal after stripping intra-token punctuation ("acti-vate" ≡
     "activate") are candidates. Catches OCR/hyphenation typos with
-    probability 1 where LSH is probabilistic; one groupBy-shaped shuffle.
-    Same per-block cap discipline as the LSH channel."""
-    # translate-gated: punctuation detection is a char-map walk over all
-    # surfaces; the removal regex only ever runs on the punctuated minority
-    df = surfaces.select(key_col).where(has_nonkey_chars(F.col(key_col)))
-    df = df.select(
-        key_col,
-        F.regexp_replace(F.col(key_col), "[^a-z0-9 ]", "").alias("ck"),
-    ).where(F.col("ck") != F.col(key_col))
-    compact = compact_form(F.col(key_col))
-    # pair each punctuated variant with every surface sharing its compact
-    # form (including the canonical un-punctuated one, if present).
-    #
-    # Plan shape matters at scale: punctuated variants are a small minority
-    # of surfaces, so probe the FULL surface table with a broadcast semi
-    # join on their compact forms first — the |surfaces|-sized side is
-    # scanned once and never shuffled (measured 16.2s → ~2s at 2M surfaces
-    # vs the groupBy-everything formulation). Group sizes for the
-    # stop-group cap are then counted on the tiny hit set; membership is
-    # identical because a group with no punctuated variant yields no pairs.
-    # no distinct() on the probe: a semi join ignores probe multiplicity,
-    # and the distinct was one more exchange + stage on the hot path; the
-    # broadcast simply carries the (small) punctuated-variant multiset
-    probe = df.select("ck")
-    allk = surfaces.select(F.col(key_col).alias("key_b"), compact.alias("ck"))
-    hit = allk.join(F.broadcast(probe), "ck", "left_semi").persist()
+    probability 1 where LSH is probabilistic. A compact group is a block
+    of the pair kernel (block_pairs), with the same stop-block cap as the
+    LSH channel, and a pair needs at least one punctuated member."""
+    key = F.col(key_col)
+    # Plan shape matters at scale: punctuated variants are a small
+    # minority of surfaces, so probe the FULL surface table with a
+    # broadcast semi join on their compact forms first — the
+    # |surfaces|-sized side is scanned once and never shuffled (measured
+    # 16.2s → ~2s at 2M surfaces vs grouping every surface). Only groups
+    # holding a punctuated key can pair, so group sizes counted on the hit
+    # set are the full group sizes. The translate gate keeps the removal
+    # regex on the punctuated minority; the probe carries their (small)
+    # compact-form multiset, as a semi join ignores multiplicity.
+    probe = surfaces.where(has_nonkey_chars(key)).select(
+        F.regexp_replace(key, "[^a-z0-9 ]", "").alias("ck")
+    )
+    hit = (
+        surfaces.select(key.alias("key"), compact_form(key).alias("ck"))
+        .join(F.broadcast(probe), "ck", "left_semi")
+        .select(
+            "ck", "key",
+            F.size(F.split(F.col("key"), " ")).alias("wg"),
+            has_nonkey_chars(F.col("key")).alias("punct"),
+        )
+        .persist()
+    )
     if registry is not None:
         registry.append(hit)
-    # Oversized compact groups are dropped whole (stop-group discipline,
-    # same as LSH hot buckets — a hash aggregate, not a global sort).
-    sizes = hit.groupBy("ck").agg(F.count("*").alias("gn"))
-    allk = hit.join(
-        sizes.where(F.col("gn") <= max_block).select("ck"), "ck", "left_semi"
+    out, _ = block_pairs(
+        hit, ["ck"], max_block, keep=lambda x, y: x["punct"] | y["punct"]
     )
-    out = (
-        df.withColumnRenamed(key_col, "key_x")
-        .join(allk, "ck")
-        .where(F.col("key_x") != F.col("key_b"))
-        .select(
-            F.least("key_x", "key_b").alias("key_a"),
-            F.greatest("key_x", "key_b").alias("key_b"),
-        )
-        .where(
-            F.size(F.split(F.col("key_a"), " "))
-            == F.size(F.split(F.col("key_b"), " "))
-        )
-    )
-    # dedup=False: see lsh_candidate_pairs — the pipeline's union-level
-    # dropDuplicates makes this channel-local shuffle redundant
+    # each key sits in exactly one compact group, so the kernel emits
+    # every pair once; dedup=True keeps the channel-local contract
     return out.dropDuplicates(["key_a", "key_b"]) if dedup else out
+
+
+def block_pairs(
+    members: DataFrame,
+    block_cols: list[str],
+    max_block: int,
+    keep: Callable[[Column, Column], Column] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Within-block candidate pairs: the one pair kernel of both blocking
+    channels, batch and incremental (the self-join and the
+    batch-against-history join are the same kernel with a different
+    `keep`).
+
+    members: one row per (block, key), with a `key` and a `wg` (word
+    count) column; every other non-block column rides along, so
+    keep(x, y) can read it from either member struct. Blocks of more than
+    max_block members are dropped whole — stop-blocks, found by a hash
+    aggregate and a semi join, not a global sort. Each remaining block is
+    collected into one array (never more than max_block entries, however
+    degenerate the raw block) and expanded row-side by a double explode:
+    one exchange and codegen'd explodes instead of a self-join. A pair is
+    kept when x.wg == y.wg and x.key < y.key, and keep(x, y) when given,
+    so within a block every unordered pair is emitted at most once.
+
+    Returns (pairs (key_a, key_b), sizes (block_cols..., bn)); a salted
+    path reads the blocks over the cap from `sizes` (hot_block_members)."""
+    sizes = members.groupBy(*block_cols).agg(F.count("*").alias("bn"))
+    cold = members.join(
+        sizes.where(F.col("bn") <= max_block).select(*block_cols),
+        block_cols,
+        "left_semi",
+    )
+    fields = [c for c in members.columns if c not in block_cols]
+    x, y = F.col("x"), F.col("y")
+    pred = (x["wg"] == y["wg"]) & (x["key"] < y["key"])
+    if keep is not None:
+        pred = pred & keep(x, y)
+    pairs = (
+        cold.groupBy(*block_cols)
+        .agg(F.collect_list(F.struct(*fields)).alias("ms"))
+        .select(F.explode("ms").alias("x"), "ms")
+        .select("x", F.explode("ms").alias("y"))
+        .where(pred)
+        .select(x["key"].alias("key_a"), y["key"].alias("key_b"))
+    )
+    return pairs, sizes
+
+
+def hot_block_members(
+    members: DataFrame,
+    sizes: DataFrame,
+    block_cols: list[str],
+    max_block: int,
+    stop_block: int | None,
+) -> DataFrame:
+    """Members of the blocks block_pairs dropped for size but that salt
+    mode keeps: more than max_block and at most stop_block members
+    (default 40·max_block — past that a shingle bucket is stopword-grade
+    noise, and recall belongs to the other channels)."""
+    stop = stop_block if stop_block is not None else max_block * 40
+    hot = sizes.where((F.col("bn") > max_block) & (F.col("bn") <= stop))
+    return members.join(hot.select(*block_cols), block_cols, "left_semi")
 
 
 def salted_block_pairs(

@@ -1237,15 +1237,15 @@ ORDER BY node
 # Incremental emission-time cap semantics (streaming.py
 # incremental_candidate_pairs; ref corpus chunk-at-a-time loop
 # config.py:168-169 + pelinker/embedder.py batch appends): items arrive in
-# batches; each batch appends per-group COUNT INCREMENTS; a batch's rows in
-# group g are emitted iff the ACCUMULATED group size at emission time (sum
-# of increments over batches <= this one) is within the hot cap, and each
-# emitted row pairs with ALL accumulated membership of its group —
-# including rows whose own batches were over-cap (membership accumulates
-# regardless of emission; "pairs emitted before a bucket went hot stay").
-# Every unordered pair is enumerated exactly once, at its LATER endpoint's
-# batch. Running sum = W6 window; cap filter = P6; emission join = J7
-# semi-join shape.
+# batches and their group membership accumulates; a batch's rows in group
+# g are emitted iff the ACCUMULATED group size at emission time (all
+# members of batches <= this one) is within the hot cap, and each emitted
+# row pairs with ALL accumulated membership of its group — including rows
+# whose own batches were over-cap (membership accumulates regardless of
+# emission; "pairs emitted before a bucket went hot stay"). Every
+# unordered pair is enumerated exactly once, at its LATER endpoint's
+# batch. The query states the size as a running sum of per-batch counts
+# (W6 window); cap filter = P6; emission join = J7 semi-join shape.
 def q36_emission_caps(spark, sf_dir):
     cap = 12
     ev = rd(spark, sf_dir, "events")

@@ -8,16 +8,14 @@ Structured Streaming:
 
 - `stream_pages` — file-source readStream over the pages table directory
   (new parquet files = new crawl drops).
-- `streaming_mention_counts` — event-time windowed counts of blocking keys
-  with a watermark for late pages: the incremental surface-statistics
-  feed. Pure column algebra (generate_mentions) runs unchanged on the
-  streaming DataFrame — the same declarative plan, micro-batched.
 - `run_incremental_link` — foreachBatch incremental linking: each
-  micro-batch extracts mentions and appends to the mention table; the
-  blocking/scoring/CC stages run as periodic batch jobs over the
-  accumulated table (the standard lambda-architecture split for
-  iterative algorithms that can't run inside a streaming query).
-
+  micro-batch extracts mentions and appends to the mention table; a
+  second query scores each micro-batch's never-seen surface keys against
+  the accumulated blocking membership (`incremental_link_batch`, through
+  the same pair kernel as batch blocking); CC runs as a periodic batch
+  job over the accumulated edges (`finalize_incremental_link` — the
+  standard lambda-architecture split for iterative algorithms that can't
+  run inside a streaming query).
 - `compact_incremental_state` — folds accumulated per-batch state
   partitions into one base partition (crash-safe marker protocol,
   replay-idempotent), so file/partition count stays O(prefixes + K)
@@ -45,81 +43,6 @@ def stream_pages(spark: SparkSession, pages_dir: str,
         spark.readStream.schema(PAGE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pages_dir)
-    )
-
-
-def streaming_mention_counts(
-    pages_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    lang: str | None = "en",
-) -> DataFrame:
-    """Event-time (warc_ts) windowed mention-mass per blocking key with a
-    late-data watermark — the streaming form of surface_table."""
-    mentions = generate_mentions(
-        pages_stream.select("url", "warc_ts", "text", "lang").withWatermark(
-            "warc_ts", watermark
-        ),
-        (1, 2, 3),
-        lang,
-        extra_cols=("warc_ts",),
-    )
-    return mentions.groupBy(
-        F.window("warc_ts", window).alias("w"), "wg", "key"
-    ).agg(F.count("*").alias("n_mentions"))
-
-
-def streaming_first_seen(
-    mentions_stream: DataFrame,
-) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): emit each
-    blocking key exactly once — on the micro-batch where it is first seen
-    — with its earliest event time and first-batch mention mass.
-
-    This is the streaming analog of the surface table's "new vocabulary"
-    feed: downstream incremental blocking only needs keys it has never
-    scored before. State per key is a single seen-flag; Spark's state
-    store checkpoints it, so a restarted query continues deduplicating
-    across restarts (tested). Late rows for an already-emitted key are
-    absorbed silently (state exists → no output)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "key string, first_seen timestamp, n_first_batch long"
-    )
-    state_schema = "seen boolean"
-
-    def fn(key, pdfs, state: GroupState):
-        n = 0
-        first = None
-        for pdf in pdfs:
-            n += len(pdf)
-            ts = pdf["warc_ts"].min()
-            first = ts if first is None else min(first, ts)
-        if state.exists:
-            return iter([])
-        state.update((True,))
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "key": [key[0]],
-                        "first_seen": [first],
-                        "n_first_batch": [n],
-                    }
-                )
-            ]
-        )
-
-    # operator output mode "append": every key row is emitted at most once
-    # (first sight), so rows are immutable — composes with append sinks
-    return mentions_stream.groupBy("key").applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -153,44 +76,41 @@ def incremental_link_batch(
     before returning, so a long-running stream does not accumulate them.
 
     Incremental blocking invariant: a candidate pair's LATER endpoint is
-    new exactly once, so joining the new keys' bucket/compact rows against
-    the accumulated state (old ∪ new) enumerates every pair at most once
-    across all batches, and — because bucket ids depend only on the key
-    string (blocking.lsh_buckets) — the union of per-batch pairs equals
-    the batch-mode pair set (parity-tested). Deviations from batch mode,
-    by construction of an append-only stream: (a) the LSH channel admits
-    every key (lsh_min_mentions is a cross-batch property); (b) the
-    hot-bucket cap applies to the ACCUMULATED bucket size at emission
-    time — pairs already emitted before a bucket went hot stay.
+    new exactly once, so pairing the accumulated members of the blocks
+    this batch touched, keeping only pairs with a new member, enumerates
+    every pair once across all batches, and — because bucket ids depend
+    only on the key string (blocking.lsh_buckets) — the union of per-batch
+    pairs equals the batch-mode pair set (parity-tested). Deviations from
+    batch mode, by construction of an append-only stream: (a) the LSH
+    channel admits every key (lsh_min_mentions is a cross-batch
+    property); (b) the hot-block cap applies to the ACCUMULATED block size
+    at emission time — pairs already emitted before a block went hot
+    stay.
 
     State layout under out_dir (all batch_id-partitioned, idempotent):
-      buckets/       (key, band, bh)      — accumulated LSH membership
-      bucket_counts/ (band, bh, n)        — per-batch count increments
-      compact/       (key, ck, punct, wc) — accumulated compact forms
-      group_counts/  (ck, n)              — per-batch count increments
-      edges/         (key_a, key_b, jw, cos) — scored edges
+      buckets/ (key, band, bh)      — accumulated LSH membership, pfx dirs
+      compact/ (key, ck, punct, wc) — accumulated compact forms, pfx dirs
+      edges/   (key_a, key_b, jw, cos) — scored edges
 
-    Per-batch cost model (the property that keeps a long-running stream
-    from degrading): the hot caps aggregate the COUNT tables (per-batch
-    increments, one row per distinct bucket/group touched — orders of
-    magnitude smaller than membership); the membership history READ is
-    pruned at the file source to the state prefixes this batch touched
-    (buckets/ and compact/ are partitioned by pmod(xxhash64(bucket-id),
-    cfg.state_prefixes) — _pruned_state); and the surviving rows are
-    further pruned through a semi join on THIS batch's exact bucket ids
-    before the pair join. Scan, shuffle and join are all proportional to
-    the batch's blocking neighborhood, not to total accumulated state
-    (receipts: tools/incremental_bench.py scanned-vs-history rows).
+    Per-batch cost model (what keeps a long-running stream from
+    degrading): the membership tables are partitioned by
+    pfx = pmod(xxhash64(bucket-id), cfg.state_prefixes), and the history
+    read is one semi join against the batch's own rows on (pfx, block
+    id), which dynamic partition pruning turns into a file-source filter
+    (_touched_history). The block sizes the caps need are counted by the
+    pair kernel over that same slice: a touched block's accumulated
+    membership is all of it. Scan, shuffle and join are proportional to
+    the batch's blocking neighborhood, not to total accumulated state.
     """
     from .pipeline import LinkConfig, release, score_pairs
 
     cfg = cfg or LinkConfig()
     if batch_id <= compacted_upto(spark, out_dir):
         # Replay of a micro-batch that compaction already folded into the
-        # base partition: its membership and count increments are in the
-        # base (re-appending them would duplicate state and re-inflate
-        # the running caps), and its edges partition was written before
-        # the compaction watermark advanced. Full no-op.
+        # base partition: its membership is in the base (re-appending it
+        # would duplicate state and inflate the block sizes the caps
+        # read), and its edges partition was written before the
+        # compaction watermark advanced. Full no-op.
         return
     nk = new_keys.select("key").dropDuplicates(["key"]).persist()
     held = [nk]
@@ -208,18 +128,13 @@ def incremental_link_batch(
 def _write_incremental_state(
     nk: DataFrame, out_dir: str, cfg, batch_id: int
 ) -> None:
-    """Append this batch's bucket/compact membership AND the per-batch
-    count increments (idempotent batch_id partitions — a replayed batch
-    rewrites its own increments, so running totals never double-count).
+    """Append this batch's bucket and compact membership (idempotent
+    batch_id partitions: a replayed batch rewrites its own rows).
 
-    Membership tables carry a `pfx = pmod(xxhash64(bucket-id), K)` state
-    partition column (K = cfg.state_prefixes): the read path pushes the
-    batch's touched-prefix set into the history scan, so per-batch state
-    reads prune at the file source instead of scanning all accumulated
-    membership (VERDICT r3 #3 — the O(history)-per-batch scale-killer of
-    a long-running stream). Count tables stay batch_id-only: they are
-    orders of magnitude smaller (one row per distinct bucket touched) and
-    are aggregated in full for the running caps."""
+    Both tables carry a `pfx = pmod(xxhash64(bucket-id), K)` state
+    partition column (K = cfg.state_prefixes), so a batch's history read
+    opens only the prefix directories the batch wrote to instead of all
+    accumulated membership (_touched_history)."""
     from .blocking import compact_form, has_nonkey_chars, lsh_buckets
 
     k = int(getattr(cfg, "state_prefixes", 64))
@@ -234,185 +149,94 @@ def _write_incremental_state(
         wc.alias("wc"),
     ).withColumn("pfx", F.pmod(F.xxhash64("ck"), F.lit(k)))
     _write_batch(nk_b, f"{out_dir}/buckets", batch_id, ("pfx",))
-    _write_batch(
-        nk_b.groupBy("band", "bh").agg(F.count("*").alias("n")),
-        f"{out_dir}/bucket_counts",
-        batch_id,
-    )
     _write_batch(nk_c, f"{out_dir}/compact", batch_id, ("pfx",))
-    _write_batch(
-        nk_c.groupBy("ck").agg(F.count("*").alias("n")),
-        f"{out_dir}/group_counts",
-        batch_id,
-    )
 
 
-def _pruned_state(spark: SparkSession, path: str, batch_id: int) -> DataFrame:
-    """Accumulated membership state restricted to the partitions (pfx
-    dirs) the given batch touched. Two-phase: (1) partition-pruned scan of
-    the batch's own rows to list its distinct pfx values (<= K ints on the
-    driver); (2) re-scan with an isin() partition filter so Spark's file
-    index skips every untouched prefix directory."""
-    touched = [
-        r["pfx"]
-        for r in spark.read.parquet(path)
-        .where(F.col("batch_id") == batch_id)
-        .select("pfx")
-        .distinct()
-        .collect()
-    ]
-    return spark.read.parquet(path).where(F.col("pfx").isin(touched))
+def _touched_history(
+    spark: SparkSession, path: str, block_cols: list[str], batch_id: int
+) -> DataFrame:
+    """Accumulated membership of the blocks that batch `batch_id` touched:
+    the state semi-joined with its own batch_id partition on (pfx, block
+    id). pfx is a partition column, so dynamic partition pruning turns the
+    join into a file-source filter and only the prefix directories the
+    batch wrote to are opened. That needs a broadcast join whose filtering
+    side is a filtered scan (the state read back with batch_id == b): with
+    AQE off, as inside foreachBatch, an in-memory filtering side is not
+    pruned. The planner broadcasts the batch's rows when they are small;
+    a whole-corpus batch reads all history, which it pairs with anyway."""
+    state = spark.read.parquet(path)
+    on = ["pfx", *block_cols]
+    touched = state.where(F.col("batch_id") == batch_id).select(*on)
+    return state.join(touched, on, "left_semi")
 
 
 def incremental_candidate_pairs(
     spark: SparkSession, out_dir: str, cfg, batch_id: int
 ) -> DataFrame:
     """Candidate pairs for ONE batch of new keys against the accumulated
-    state (state for `batch_id` must already be written). Shares every cap
-    with the batch pipeline through LinkConfig — `max_block` for LSH
-    buckets, `compact_max_block` for compact groups — so a single-batch
-    run over a whole corpus enumerates exactly the batch pipeline's pair
-    set at lsh_min_mentions=1 (parity-tested at default caps)."""
+    state (state for `batch_id` must already be written), through the
+    batch channels' pair kernel (blocking.block_pairs) with a predicate
+    that keeps pairs touching a new key. Shares every cap with the batch
+    pipeline through LinkConfig — `max_block` for LSH buckets,
+    `compact_max_block` for compact groups — so a single-batch run over a
+    whole corpus enumerates exactly the batch pipeline's pair set at
+    lsh_min_mentions=1 (parity-tested at default caps)."""
+    from .blocking import block_pairs, hot_block_members, salted_cross_pairs
     from .pipeline import prefilter_pairs
 
-    # File-source pruning of the accumulated membership (VERDICT r3 #3):
-    # collect the batch's touched state prefixes (bounded by
-    # cfg.state_prefixes — a driver list of <= K ints, never
-    # data-proportional) and push them into the history read as a
-    # partition-column filter. Only state files whose pfx directory can
-    # pair with this batch are opened; a batch touching a narrow blocking
-    # neighborhood reads a proportional slice of history rather than all
-    # of it. The touched-set probe itself scans only the batch's own
-    # batch_id partition (partition-pruned) for the pfx directory column.
-    all_b = _pruned_state(spark, f"{out_dir}/buckets", batch_id)
-    all_c = _pruned_state(spark, f"{out_dir}/compact", batch_id)
+    new = (F.col("batch_id") == batch_id).alias("new")
+    buckets = _touched_history(
+        spark, f"{out_dir}/buckets", ["band", "bh"], batch_id
+    ).select(
+        "band", "bh", "key", F.size(F.split(F.col("key"), " ")).alias("wg"), new
+    )
+    compact = _touched_history(
+        spark, f"{out_dir}/compact", ["ck"], batch_id
+    ).select("ck", "key", F.col("wc").alias("wg"), "punct", new)
 
-    # hot caps from the running-count tables: accumulated size at emission
-    # time = sum of per-batch increments up to now
-    bucket_sizes = (
-        spark.read.parquet(f"{out_dir}/bucket_counts")
-        .groupBy("band", "bh")
-        .agg(F.sum("n").alias("bn"))
+    pairs_lsh, sizes = block_pairs(
+        buckets, ["band", "bh"], cfg.max_block,
+        keep=lambda x, y: x["new"] | y["new"],
     )
-    ok_buckets = bucket_sizes.where(F.col("bn") <= cfg.max_block).select(
-        "band", "bh"
+    pairs_c, _ = block_pairs(
+        compact, ["ck"], cfg.compact_max_block,
+        keep=lambda x, y: (x["punct"] | y["punct"]) & (x["new"] | y["new"]),
     )
-    nb = all_b.where(F.col("batch_id") == batch_id).join(
-        ok_buckets, ["band", "bh"], "left_semi"
-    )
-    # prune history to buckets this batch actually touched BEFORE the
-    # pair join, so the full-history shuffle carries only joinable rows.
-    # No broadcast hint: a "batch" can legitimately be a whole corpus
-    # (single-drop runs, the parity test), making this set unbounded —
-    # AQE broadcasts it when it is actually small
-    ob = all_b.join(
-        nb.select("band", "bh").dropDuplicates(), ["band", "bh"], "left_semi"
-    )
-    pairs_lsh = (
-        nb.select("band", "bh", F.col("key").alias("k1"))
-        .join(ob.select("band", "bh", F.col("key").alias("k2")), ["band", "bh"])
-        .where(F.col("k1") != F.col("k2"))
-        .select(
-            F.least("k1", "k2").alias("key_a"),
-            F.greatest("k1", "k2").alias("key_b"),
+    pairs = pairs_lsh.unionByName(pairs_c)
+    if cfg.hot_bucket_mode == "salt":
+        # buckets whose accumulated size at emission time is in
+        # (max_block, stop] keep all (new × history) pairs, spread over
+        # lsh_hot_salts² shuffle cells per bucket: O(new·n), not n²
+        hot = hot_block_members(
+            buckets, sizes, ["band", "bh"], cfg.max_block, cfg.lsh_stop_block
         )
-        .where(
-            F.size(F.split(F.col("key_a"), " "))
-            == F.size(F.split(F.col("key_b"), " "))
-        )
-    )
-    if getattr(cfg, "hot_bucket_mode", "drop") == "salt":
-        # salted skew path (north rule; parity with the batch pipeline's
-        # hot_bucket_mode="salt"): buckets whose ACCUMULATED size at
-        # emission time is in (max_block, stop] keep all (new × history)
-        # pairs, spread over lsh_hot_salts² shuffle cells per bucket
-        from .blocking import salted_cross_pairs
-
-        stop = (
-            cfg.lsh_stop_block
-            if cfg.lsh_stop_block is not None
-            else cfg.max_block * 40
-        )
-        hot_ids = bucket_sizes.where(
-            (F.col("bn") > cfg.max_block) & (F.col("bn") <= stop)
-        ).select("band", "bh")
-        nb_hot = all_b.where(F.col("batch_id") == batch_id).join(
-            hot_ids, ["band", "bh"], "left_semi"
-        )
-        ob_hot = all_b.join(
-            nb_hot.select("band", "bh").dropDuplicates(),
-            ["band", "bh"],
-            "left_semi",
-        )
-        hot_pairs = (
-            salted_cross_pairs(
-                nb_hot.select("band", "bh", F.col("key").alias("k1")),
-                ob_hot.select("band", "bh", F.col("key").alias("k2")),
-                ["band", "bh"],
-                "k1",
-                "k2",
-                cfg.lsh_hot_salts,
-            )
-            .where(F.col("k1") != F.col("k2"))
-            .select(
+        cols = ["band", "bh", "wg"]
+        cross = salted_cross_pairs(
+            hot.where(F.col("new")).select(*cols, F.col("key").alias("k1")),
+            hot.select(*cols, F.col("key").alias("k2")),
+            cols, "k1", "k2", cfg.lsh_hot_salts,
+        ).where(F.col("k1") != F.col("k2"))
+        pairs = pairs.unionByName(
+            cross.select(
                 F.least("k1", "k2").alias("key_a"),
                 F.greatest("k1", "k2").alias("key_b"),
             )
-            .where(
-                F.size(F.split(F.col("key_a"), " "))
-                == F.size(F.split(F.col("key_b"), " "))
-            )
         )
-        pairs_lsh = pairs_lsh.unionByName(hot_pairs)
-
-    ok_groups = (
-        spark.read.parquet(f"{out_dir}/group_counts")
-        .groupBy("ck")
-        .agg(F.sum("n").alias("gn"))
-        .where(F.col("gn") <= cfg.compact_max_block)
-        .select("ck")
-    )
-    ncp = all_c.where(F.col("batch_id") == batch_id).join(
-        ok_groups, "ck", "left_semi"
-    )
-    ocp = all_c.join(ncp.select("ck").dropDuplicates(), "ck", "left_semi")
-    pairs_c = (
-        ncp.select("ck", F.col("key").alias("k1"), F.col("punct").alias("p1"),
-                   F.col("wc").alias("w1"))
-        .join(
-            ocp.select("ck", F.col("key").alias("k2"),
-                       F.col("punct").alias("p2"), F.col("wc").alias("w2")),
-            "ck",
-        )
-        .where((F.col("k1") != F.col("k2")) & (F.col("p1") | F.col("p2")))
-        .where(F.col("w1") == F.col("w2"))
-        .select(
-            F.least("k1", "k2").alias("key_a"),
-            F.greatest("k1", "k2").alias("key_b"),
-        )
-    )
-
-    return (
-        prefilter_pairs(pairs_lsh.unionByName(pairs_c))
-        .dropDuplicates(["key_a", "key_b"])
-    )
+    return prefilter_pairs(pairs).dropDuplicates(["key_a", "key_b"])
 
 
 # --------------------------------------------------- state compaction
 # A long-running stream appends one batch_id partition per micro-batch
 # to every state table. Membership READS prune by pfx (above), so query
 # cost stays proportional — but file/partition COUNT grows O(batches):
-# listing, parquet footers, and task scheduling degrade, and the count
-# tables (batch_id-only) are re-aggregated over ever more files each
-# batch. Compaction folds all state with batch_id <= W into one BASE
-# partition (batch_id = -1), preserving every read-path invariant:
-# membership rows are immutable (fold = rewrite), count increments are
-# additive (fold = pre-aggregate the sum). Edges are output, not probe
-# state — never compacted.
+# listing, parquet footers, and task scheduling degrade. Compaction folds
+# all state with batch_id <= W into one BASE partition (batch_id = -1);
+# membership rows are immutable, so the fold is a rewrite and every
+# read-path invariant holds. Edges fold too, capped at the CC watermark
+# (compact_incremental_state).
 
 BASE_BATCH = -1
-_STATE_TABLES = ("buckets", "compact", "bucket_counts", "group_counts")
-_COUNT_KEYS = {"bucket_counts": ("band", "bh"), "group_counts": ("ck",)}
+_STATE_TABLES = ("buckets", "compact")
 _COMPACT_MARKER = "_COMPACTION.json"
 _PENDING_MARKER = "_COMPACT_PENDING.json"
 
@@ -520,7 +344,7 @@ def compact_incremental_state(
     the swap per table. Replay idempotence after compaction:
     incremental_link_batch skips state writes for batch_id <= watermark
     (the rows are already in the base), so a foreachBatch replay of a
-    folded micro-batch cannot duplicate membership or re-inflate caps.
+    folded micro-batch cannot duplicate membership or inflate caps.
 
     The edges/ table (the last unbounded partition growth in the
     incremental path) folds too, but capped at the incremental-CC
@@ -593,12 +417,7 @@ def compact_incremental_state(
         src = spark.read.parquet(f"{out_dir}/{table}").where(
             F.col("batch_id") <= cap
         )
-        keys = _COUNT_KEYS.get(table)
-        if keys:
-            # additive increments -> one pre-summed increment row per key
-            folded = src.groupBy(*keys).agg(F.sum("n").alias("n"))
-            writer = folded.repartition(*keys).write
-        elif table == "edges":
+        if table == "edges":
             # edges carry no pfx column (they are never prefix-pruned;
             # CC reads them in full) — cap file count at the same knob
             folded = src.drop("batch_id")
@@ -611,9 +430,8 @@ def compact_incremental_state(
             folded = src.drop("batch_id")
             writer = folded.repartition("pfx").write.partitionBy("pfx")
         # write first, then count from the written parquet's footers — a
-        # metadata-only job. Counting the DataFrame before the write ran
-        # the whole fold twice (round 6: the one repeated-work plan in
-        # the compaction path).
+        # metadata-only job; counting the DataFrame before the write would
+        # run the whole fold twice
         writer.mode("overwrite").parquet(f"{out_dir}/.compact_tmp/{table}")
         counts[table] = spark.read.parquet(
             f"{out_dir}/.compact_tmp/{table}"
@@ -833,7 +651,6 @@ def run_incremental_link(
     lang: str | None = "en",
     cfg=None,
     max_files_per_trigger: int = 8,
-    use_stateful_first_seen: bool = False,
     compact_every: int | None = None,
 ) -> None:
     """Two CHAINED streaming queries, each with its own checkpoint
@@ -849,22 +666,12 @@ def run_incremental_link(
          accumulated key state (incremental_link_batch) — batch 2 never
          re-scores batch 1's vocabulary.
 
-    First-seen dedup has two implementations with identical semantics
-    (a key scores exactly once, in the first batch where it appears;
-    both survive restarts):
-
-      - default: anti-join the batch's keys against the accumulated
-        bucket state, strictly-older partitions only (`batch_id <
-        current`, so an ingest-replay of the current partition stays
-        idempotent). The on-disk state the scorer already maintains IS
-        the seen-set — pure JVM column algebra, no second state store.
-      - use_stateful_first_seen=True: route through
-        streaming_first_seen (applyInPandasWithState). Same output;
-        measured 40x slower end-to-end at 40k pages / 5 drops (1405s vs
-        34.7s batch — per-KEY pandas groups put every mention row
-        through a Python state call). Kept as the §2.10 stateful-
-        operator showcase and for sinks that need the (key, first_seen,
-        n_first_batch) feed itself.
+    First-seen dedup (a key scores exactly once, in the first batch
+    where it appears; survives restarts): anti-join the batch's keys
+    against the accumulated bucket state, strictly-older partitions only
+    (`batch_id < current`, so an ingest-replay of the current partition
+    stays idempotent). The on-disk state the scorer already maintains IS
+    the seen-set — pure JVM column algebra, no second state store.
 
     CC + cluster assignment then run as a periodic batch job
     (finalize_incremental_link).
@@ -918,49 +725,35 @@ def run_incremental_link(
         .parquet(f"{out_dir}/mentions")
     )
 
-    if use_stateful_first_seen:
-
-        def score_new(batch_df: DataFrame, batch_id: int) -> None:
-            incremental_link_batch(spark, batch_df, out_dir, cfg, batch_id)
-            _maybe_compact(batch_id)
-
-        source = streaming_first_seen(mention_stream)
-    else:
-
-        def score_new(batch_df: DataFrame, batch_id: int) -> None:
-            nk = batch_df.select("key").dropDuplicates(["key"])
-            if fs_exists(spark, f"{out_dir}/buckets"):
-                # every key has exactly ONE band-0 row, so the band filter
-                # makes this a one-row-per-seen-key, key-column-pruned scan
-                # (row-group stats prune the other bands) instead of a
-                # bands-times-larger read per micro-batch
-                seen = (
-                    spark.read.parquet(f"{out_dir}/buckets")
-                    .where(
-                        (F.col("batch_id") < F.lit(batch_id))
-                        & (F.col("band") == 0)
-                    )
-                    .select("key")
+    def score_new(batch_df: DataFrame, batch_id: int) -> None:
+        nk = batch_df.select("key").dropDuplicates(["key"])
+        if fs_exists(spark, f"{out_dir}/buckets"):
+            # every key has exactly ONE band-0 row, so the band filter
+            # makes this a one-row-per-seen-key, key-column-pruned scan
+            # (row-group stats prune the other bands) instead of a
+            # bands-times-larger read per micro-batch
+            seen = (
+                spark.read.parquet(f"{out_dir}/buckets")
+                .where(
+                    (F.col("batch_id") < F.lit(batch_id))
+                    & (F.col("band") == 0)
                 )
-                # Inverted probe (VERDICT r4 #1): the accumulated history
-                # is SCANNED but never SHUFFLED. A plain nk ⟕̸ seen
-                # anti-join sort-merges, shuffling every key EVER seen on
-                # every micro-batch — O(history) per batch. Instead
-                # semi-join the history against the (batch-sized, always
-                # broadcastable) new-key set map-side, yielding an
-                # "already seen" set no larger than the batch, then
-                # anti-join the batch against THAT, also broadcast. Both
-                # joins are BroadcastHashJoin; per-batch shuffle volume is
-                # O(batch), independent of accumulated state size.
-                already = seen.join(F.broadcast(nk), "key", "left_semi")
-                nk = nk.join(F.broadcast(already), "key", "left_anti")
-            incremental_link_batch(spark, nk, out_dir, cfg, batch_id)
-            _maybe_compact(batch_id)
-
-        source = mention_stream
+                .select("key")
+            )
+            # The accumulated history is SCANNED but never SHUFFLED, so
+            # per-batch shuffle volume is O(batch), not O(history): semi
+            # join the history against the (batch-sized) new-key set
+            # map-side, giving an "already seen" set no larger than the
+            # batch, then anti-join the batch against THAT — both
+            # broadcast hash joins. A plain nk ⟕̸ seen anti-join would
+            # sort-merge and shuffle every key ever seen.
+            already = seen.join(F.broadcast(nk), "key", "left_semi")
+            nk = nk.join(F.broadcast(already), "key", "left_anti")
+        incremental_link_batch(spark, nk, out_dir, cfg, batch_id)
+        _maybe_compact(batch_id)
 
     q2 = (
-        source.writeStream.foreachBatch(score_new)
+        mention_stream.writeStream.foreachBatch(score_new)
         .option("checkpointLocation", f"{checkpoint_dir}/score")
         .trigger(availableNow=True)
         .start()

@@ -12,6 +12,7 @@ import itertools
 from pyspark.sql import functions as F
 
 from pelinker_spark.blocking import (
+    block_pairs,
     lsh_candidate_pairs,
     salted_block_pairs,
     salted_cross_pairs,
@@ -48,6 +49,46 @@ def test_salted_block_pairs_equals_naive(spark):
             for r in salted_block_pairs(df, ["blk"], "key", s).collect()
         }
         assert got == expected, f"salt count {s}"
+
+
+def test_block_pairs_equals_naive(spark):
+    """The pair kernel equals the naive within-block self-join on random
+    small blocks: blocks over max_block are dropped whole, pairs stay
+    within a word group, and a keep predicate filters on member fields."""
+    import random
+
+    rng = random.Random(5)
+    rows = [
+        (f"b{b}", f"k{b}_{i}", rng.randint(1, 2), rng.random() < 0.3)
+        for b in range(12)
+        for i in range(rng.randint(1, 9))
+    ]
+    df = spark.createDataFrame(rows, "blk string, key string, wg int, f boolean")
+    max_block = 6
+    blocks = {}
+    for blk, key, wg, f in rows:
+        blocks.setdefault(blk, []).append((key, wg, f))
+    assert any(len(ms) > max_block for ms in blocks.values())
+
+    def naive(keep):
+        flag = {key: f for _, key, _, f in rows}
+        return {
+            (a, b)
+            for ms in blocks.values()
+            if len(ms) <= max_block
+            for wg in (1, 2)
+            for a, b in _naive_pairs([k for k, w, _ in ms if w == wg])
+            if keep(flag[a], flag[b])
+        }
+
+    for keep, ref in (
+        (None, lambda a, b: True),
+        (lambda x, y: x["f"] | y["f"], lambda a, b: a or b),
+    ):
+        pairs, _ = block_pairs(df, ["blk"], max_block, keep=keep)
+        got = [(r.key_a, r.key_b) for r in pairs.collect()]
+        assert len(got) == len(set(got))  # each pair once
+        assert set(got) == naive(ref) and got
 
 
 def test_salted_cross_pairs_equals_plain_join(spark):

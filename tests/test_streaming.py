@@ -1,40 +1,15 @@
-"""Structured Streaming: windowed mention counts + incremental ingest
-with exactly-once resume."""
+"""Structured Streaming: incremental ingest with exactly-once resume,
+and incremental blocking against the accumulated state."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from pelinker_spark.mentions import generate_mentions
-from pelinker_spark.streaming import (
-    run_incremental_link,
-    stream_pages,
-    streaming_mention_counts,
-)
+from pelinker_spark.streaming import run_incremental_link
 from pelinker_spark.synth import web_pages
-
-
-def test_streaming_mention_counts(spark, tmp_path):
-    pages_dir = str(tmp_path / "pages")
-    web_pages(spark, 300, seed=42, n_entities=30, partitions=4).write.parquet(pages_dir)
-
-    stream = stream_pages(spark, pages_dir, max_files_per_trigger=2)
-    counts = streaming_mention_counts(stream, window="1 day", watermark="1 day")
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("mention_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ck1"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout=180)
-    got = spark.sql("select sum(n_mentions) as n from mention_counts").collect()[0]["n"]
-
-    # batch ground truth: identical plan over the same files
-    pages = spark.read.parquet(pages_dir)
-    expect = generate_mentions(pages, (1, 2, 3), "en").count()
-    assert got == expect
+from test_fsio import _jobs_in
 
 
 def test_incremental_link_exactly_once(spark, tmp_path):
@@ -174,101 +149,57 @@ def test_incremental_compact_cap_matches_batch(spark, tmp_path):
     assert a, "the 15-key compact group must produce pairs at default caps"
 
 
-def test_incremental_stateful_variant_matches_default(spark, tmp_path):
-    """run_incremental_link's two first-seen implementations (anti-join
-    default vs applyInPandasWithState) must produce the same edge set on
-    the same drops."""
-    from pelinker_spark.streaming import run_incremental_link
-
-    pages_dir = str(tmp_path / "pages_v")
-    web_pages(spark, 120, seed=42, n_entities=15, partitions=2).coalesce(
-        1
-    ).write.mode("append").parquet(pages_dir)
-    web_pages(spark, 120, seed=77, n_entities=15, partitions=2).coalesce(
-        1
-    ).write.mode("append").parquet(pages_dir)
-
-    edge_sets = {}
-    for variant, flag in (("anti", False), ("stateful", True)):
-        out = str(tmp_path / f"out_{variant}")
-        ck = str(tmp_path / f"ck_{variant}")
-        run_incremental_link(
-            spark, pages_dir, out, ck,
-            max_files_per_trigger=1, use_stateful_first_seen=flag,
-        )
-        edge_sets[variant] = {
-            (r["key_a"], r["key_b"])
-            for r in spark.read.parquet(f"{out}/edges")
-            .select("key_a", "key_b")
-            .collect()
-        }
-    assert edge_sets["anti"] == edge_sets["stateful"]
-    assert edge_sets["anti"]  # non-trivial: some edges were scored
-
-
-def test_streaming_first_seen_stateful(spark, tmp_path):
-    """applyInPandasWithState: a key is emitted exactly once across
-    micro-batches AND across query restarts (state-store resume)."""
-    from pelinker_spark.streaming import streaming_first_seen
-
-    pages_dir = tmp_path / "pages_fs"
-    pages_dir.mkdir()
-    ck = str(tmp_path / "ck_fs")
-
-    def run_once(qname):
-        stream = stream_pages(spark, str(pages_dir), max_files_per_trigger=2)
-        mentions = generate_mentions(
-            stream.select("url", "warc_ts", "text", "lang"),
-            (1, 2, 3), "en", extra_cols=("warc_ts",),
-        )
-        q = (
-            streaming_first_seen(mentions)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "out_fs"))
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout=300)
-
-    # batch 1
-    web_pages(spark, 120, seed=42, n_entities=20, partitions=2).write.mode(
-        "append"
-    ).parquet(str(pages_dir))
-    run_once("fs1")
-    out1 = spark.read.parquet(str(tmp_path / "out_fs"))
-    n1 = out1.count()
-    assert n1 == out1.select("key").distinct().count()  # unique keys only
-
-    # batch 2: same seed prefix → heavy key overlap, plus genuinely new
-    # pages; a RESTARTED query must emit only the never-seen keys
-    web_pages(spark, 240, seed=42, n_entities=20, partitions=2).write.mode(
-        "append"
-    ).parquet(str(pages_dir))
-    run_once("fs2")
-    out2 = spark.read.parquet(str(tmp_path / "out_fs"))
-    assert out2.count() == out2.select("key").distinct().count()  # still unique
-
-    # every key ever seen appears exactly once, and equals the batch truth
-    pages = spark.read.parquet(str(pages_dir))
-    expect_keys = (
-        generate_mentions(pages, (1, 2, 3), "en").select("key").distinct().count()
+def test_incremental_cap_applies_at_emission_time(spark, tmp_path):
+    """The compact-group cap counts the group's ACCUMULATED size when a
+    batch emits: batch 0's three-key group pairs; batch 1's fourth key
+    takes the group over the cap, so batch 1 emits nothing while batch
+    0's pairs stay emitted; under a cap the group never crosses, the new
+    key pairs with every accumulated member. max_block=1 keeps the LSH
+    channel silent, so every pair is the deterministic compact
+    channel's."""
+    from pelinker_spark.pipeline import LinkConfig
+    from pelinker_spark.streaming import (
+        _write_incremental_state,
+        incremental_candidate_pairs,
     )
-    assert out2.count() == expect_keys
+
+    batches = [["identifier", "ident-ifier", "identi-fier"], ["iden-tifier"]]
+
+    def emitted(cap):
+        cfg = LinkConfig(max_block=1, compact_max_block=cap)
+        out = str(tmp_path / f"cap{cap}")
+        per_batch = []
+        for b, keys in enumerate(batches):
+            nk = spark.createDataFrame([(k,) for k in keys], "key string")
+            _write_incremental_state(nk, out, cfg, b)
+            pairs = incremental_candidate_pairs(spark, out, cfg, b)
+            per_batch.append({(r.key_a, r.key_b) for r in pairs.collect()})
+        return per_batch
+
+    def unordered(pairs):
+        return {tuple(sorted(p)) for p in pairs}
+
+    first = unordered([
+        ("identifier", "ident-ifier"), ("identifier", "identi-fier"),
+        ("ident-ifier", "identi-fier"),
+    ])
+    assert emitted(3) == [first, set()]
+    assert emitted(4) == [
+        first, unordered((k, "iden-tifier") for k in batches[0])
+    ]
 
 
 def test_state_prefix_pruning(spark, tmp_path):
-    """VERDICT r3 #3: membership state is partitioned by a bucket-hash
-    prefix, and a batch's history read scans ONLY the prefixes it
-    touched — proportional to the batch's blocking neighborhood, not to
-    accumulated history. A wide batch 0 then a single-key batch 1: batch
-    1's pruned scan must be a small slice of history, while candidate
-    pairing still sees every cross-batch partner (pair correctness is
-    unaffected by the pruning)."""
+    """Membership state is partitioned by a bucket-hash prefix, and a
+    batch's history read opens ONLY the prefix directories it touched —
+    proportional to the batch's blocking neighborhood, not to accumulated
+    history. A wide batch 0 then a single-key batch 1, planned with AQE
+    off as inside foreachBatch: building the pair frame runs no Spark job
+    beyond the two state tables' own reads (no driver-side probe), the
+    history scan opens under a quarter of the state files, and pairing
+    still sees the cross-batch partner."""
     from pelinker_spark.pipeline import LinkConfig
     from pelinker_spark.streaming import (
-        _pruned_state,
         _write_incremental_state,
         incremental_candidate_pairs,
     )
@@ -283,26 +214,42 @@ def test_state_prefix_pruning(spark, tmp_path):
     b1 = spark.createDataFrame([("acti-vate",)], "key string")
     _write_incremental_state(b1, out, cfg, 1)
 
-    full = spark.read.parquet(f"{out}/buckets")
-    pruned = _pruned_state(spark, f"{out}/buckets", 1)
-    n_full, n_pruned = full.count(), pruned.count()
-    # one key touches at most lsh_bands + punct-channel prefixes; with 64
-    # prefixes over 401 keys the untouched majority must be skipped
-    assert n_pruned < n_full / 4, (n_pruned, n_full)
-    # and the physical scan prunes at the source: files actually touched
-    # by the pruned read are a strict subset of the state files (the
-    # partition filter reaches the file index; inputFiles() can't show
-    # this — it lists the relation's roots before partition pruning)
-    import pyspark.sql.functions as _F
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        # a read of a directory with more partition directories than
+        # spark.sql.sources.parallelPartitionDiscovery.threshold lists
+        # them with a job of its own; that is the floor
+        _, n_read = _jobs_in(spark, lambda: [
+            spark.read.parquet(f"{out}/{t}") for t in ("buckets", "compact")
+        ])
+        pairs, n_build = _jobs_in(
+            spark, lambda: incremental_candidate_pairs(spark, out, cfg, 1)
+        )
+        got = {(r.key_a, r.key_b) for r in pairs.collect()}
+        plan = pairs._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert n_build <= n_read, (n_build, n_read)
 
-    read_files = {
-        r["f"]
-        for r in pruned.select(_F.input_file_name().alias("f")).distinct().collect()
-    }
-    all_files = set(full.inputFiles())
-    assert read_files and len(read_files) < len(all_files) / 4
+    # the history scans are the bucket-state scans that dynamic partition
+    # pruning filters; numFiles counts the files each actually opened
+    leaves = plan.collectLeaves()
+    history_files = [
+        leaf.metrics().get("numFiles").get().value()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
+        and leaf.relation().location().rootPaths().head().toString()
+        .endswith("/buckets")
+        and "dynamicpruning" in leaf.partitionFilters().toString()
+    ]
+    all_files = sum(
+        f.endswith(".parquet")
+        for _, _, fs in os.walk(f"{out}/buckets")
+        for f in fs
+    )
+    assert history_files, plan.toString()
+    assert max(history_files) < all_files / 4, (history_files, all_files)
 
     # pairing across batches still works through the pruned read
-    pairs = incremental_candidate_pairs(spark, out, cfg, 1)
-    got = {(r.key_a, r.key_b) for r in pairs.collect()}
     assert ("acti-vate", "activate") in got

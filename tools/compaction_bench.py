@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-STATE_TABLES = ("buckets", "compact", "bucket_counts", "group_counts", "edges")
+STATE_TABLES = ("buckets", "compact", "edges")
 
 
 def parquet_files(root: str) -> int:
