@@ -83,13 +83,6 @@ class LinkConfig:
     # fused vector (= mean of per-source cosines for unit parts), the
     # model-selection fused re-evaluation path (runner.py:584-812).
     encoder_variants: tuple[str, ...] = ("default",)
-    # incremental-state bucketing fanout: buckets/ and compact/ state is
-    # partitioned by pmod(xxhash64(bh|ck), state_prefixes) so a
-    # micro-batch's history probe prunes at the FILE SOURCE (only
-    # partitions holding prefixes the batch touched are read) instead of
-    # scanning all accumulated membership per batch. Shared through
-    # LinkConfig for the same parity reason as the caps above.
-    state_prefixes: int = 64
     # per-mention link_score/exact_key feature. Default on
     # (the public projection carries it); callers that only need cluster
     # ids (the scaling bench's hot path, bulk re-cluster jobs) can turn it

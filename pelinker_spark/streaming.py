@@ -18,8 +18,8 @@ Structured Streaming:
   run inside a streaming query).
 - `compact_incremental_state` — folds accumulated per-batch state
   partitions into one base partition (crash-safe marker protocol,
-  replay-idempotent), so file/partition count stays O(prefixes + K)
-  on a long-running stream instead of O(batches ever). Wired into
+  replay-idempotent), so file/partition count stays O(K) on a
+  long-running stream instead of O(batches ever). Wired into
   `run_incremental_link` via compact_every=K.
 
 Checkpointing: Spark's own streaming checkpoint (offsets + sink state)
@@ -46,20 +46,17 @@ def stream_pages(spark: SparkSession, pages_dir: str,
     )
 
 
-def _write_batch(
-    df: DataFrame, path: str, batch_id: int,
-    extra_partition_cols: tuple[str, ...] = (),
-) -> None:
-    """Idempotent per-batch append: partition by batch_id (plus any state
-    bucketing columns) with dynamic partition overwrite, so a foreachBatch
-    replay (streaming checkpoint not yet committed when the job died)
-    rewrites its own partitions instead of duplicating rows — the parquet
-    stand-in for an Iceberg idempotent append."""
+def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    """Idempotent per-batch append: partition by batch_id with dynamic
+    partition overwrite, so a foreachBatch replay (streaming checkpoint
+    not yet committed when the job died) rewrites its own partition
+    instead of duplicating rows — the parquet stand-in for an Iceberg
+    idempotent append."""
     (
         df.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", *extra_partition_cols)
+        .partitionBy("batch_id")
         .parquet(path)
     )
 
@@ -87,20 +84,20 @@ def incremental_link_batch(
     at emission time — pairs already emitted before a block went hot
     stay.
 
-    State layout under out_dir (all batch_id-partitioned, idempotent):
-      buckets/ (key, band, bh)      — accumulated LSH membership, pfx dirs
-      compact/ (key, ck, punct, wc) — accumulated compact forms, pfx dirs
+    State layout under out_dir (partitioned by batch_id only, each batch
+    at most spark.sql.shuffle.partitions files per table, idempotent):
+      buckets/ (key, band, bh)      — accumulated LSH membership
+      compact/ (key, ck, punct, wc) — accumulated compact forms
       edges/   (key_a, key_b, jw, cos) — scored edges
 
-    Per-batch cost model (what keeps a long-running stream from
-    degrading): the membership tables are partitioned by
-    pfx = pmod(xxhash64(bucket-id), cfg.state_prefixes), and the history
-    read is one semi join against the batch's own rows on (pfx, block
-    id), which dynamic partition pruning turns into a file-source filter
-    (_touched_history). The block sizes the caps need are counted by the
-    pair kernel over that same slice: a touched block's accumulated
-    membership is all of it. Scan, shuffle and join are proportional to
-    the batch's blocking neighborhood, not to total accumulated state.
+    Per-batch cost model: the history read is one semi join of the
+    membership state with the batch's own rows on the block id
+    (_touched_history), so shuffle, join and pair enumeration are
+    proportional to the batch's blocking neighborhood; the scan reads
+    all accumulated membership, which compaction (compact_every) keeps
+    in O(K) files. The block sizes the caps need are counted by the pair
+    kernel over that same slice: a touched block's accumulated
+    membership is all of it.
     """
     from .pipeline import LinkConfig, release, score_pairs
 
@@ -129,45 +126,32 @@ def _write_incremental_state(
     nk: DataFrame, out_dir: str, cfg, batch_id: int
 ) -> None:
     """Append this batch's bucket and compact membership (idempotent
-    batch_id partitions: a replayed batch rewrites its own rows).
-
-    Both tables carry a `pfx = pmod(xxhash64(bucket-id), K)` state
-    partition column (K = cfg.state_prefixes), so a batch's history read
-    opens only the prefix directories the batch wrote to instead of all
-    accumulated membership (_touched_history)."""
+    batch_id partitions: a replayed batch rewrites its own rows)."""
     from .blocking import compact_form, has_nonkey_chars, lsh_buckets
 
-    k = int(getattr(cfg, "state_prefixes", 64))
-    wc = F.size(F.split(F.col("key"), " "))
-    nk_b = lsh_buckets(
-        nk, "key", cfg.lsh_num_hashes, cfg.lsh_bands, cfg.lsh_rows
-    ).withColumn("pfx", F.pmod(F.xxhash64("bh"), F.lit(k)))
+    nk_b = lsh_buckets(nk, "key", cfg.lsh_num_hashes, cfg.lsh_bands, cfg.lsh_rows)
     nk_c = nk.select(
         "key",
         compact_form(F.col("key")).alias("ck"),
         has_nonkey_chars(F.col("key")).alias("punct"),
-        wc.alias("wc"),
-    ).withColumn("pfx", F.pmod(F.xxhash64("ck"), F.lit(k)))
-    _write_batch(nk_b, f"{out_dir}/buckets", batch_id, ("pfx",))
-    _write_batch(nk_c, f"{out_dir}/compact", batch_id, ("pfx",))
+        F.size(F.split(F.col("key"), " ")).alias("wc"),
+    )
+    # buckets/ is written last: nk's lineage may read it (first-seen), and
+    # writing it drops nk's cache, so no later write may recompute nk
+    _write_batch(nk_c, f"{out_dir}/compact", batch_id)
+    _write_batch(nk_b, f"{out_dir}/buckets", batch_id)
 
 
 def _touched_history(
     spark: SparkSession, path: str, block_cols: list[str], batch_id: int
 ) -> DataFrame:
     """Accumulated membership of the blocks that batch `batch_id` touched:
-    the state semi-joined with its own batch_id partition on (pfx, block
-    id). pfx is a partition column, so dynamic partition pruning turns the
-    join into a file-source filter and only the prefix directories the
-    batch wrote to are opened. That needs a broadcast join whose filtering
-    side is a filtered scan (the state read back with batch_id == b): with
-    AQE off, as inside foreachBatch, an in-memory filtering side is not
-    pruned. The planner broadcasts the batch's rows when they are small;
-    a whole-corpus batch reads all history, which it pairs with anyway."""
+    the state semi-joined with its own batch_id partition on the block
+    id. The planner broadcasts the batch's rows when they are small, so
+    only the touched slice of history reaches a shuffle."""
     state = spark.read.parquet(path)
-    on = ["pfx", *block_cols]
-    touched = state.where(F.col("batch_id") == batch_id).select(*on)
-    return state.join(touched, on, "left_semi")
+    touched = state.where(F.col("batch_id") == batch_id).select(*block_cols)
+    return state.join(touched, block_cols, "left_semi")
 
 
 def incremental_candidate_pairs(
@@ -227,12 +211,12 @@ def incremental_candidate_pairs(
 
 # --------------------------------------------------- state compaction
 # A long-running stream appends one batch_id partition per micro-batch
-# to every state table. Membership READS prune by pfx (above), so query
-# cost stays proportional — but file/partition COUNT grows O(batches):
+# to every state table, so file/partition count grows O(batches):
 # listing, parquet footers, and task scheduling degrade. Compaction folds
-# all state with batch_id <= W into one BASE partition (batch_id = -1);
-# membership rows are immutable, so the fold is a rewrite and every
-# read-path invariant holds. Edges fold too, capped at the CC watermark
+# all state with batch_id <= W into one BASE partition (batch_id = -1) of
+# at most defaultParallelism files per table; membership rows are
+# immutable, so the fold is a rewrite and every read-path invariant
+# holds. Edges fold too, capped at the CC watermark
 # (compact_incremental_state).
 
 BASE_BATCH = -1
@@ -325,7 +309,6 @@ def recover_compaction(spark: SparkSession, out_dir: str) -> bool:
 def compact_incremental_state(
     spark: SparkSession,
     out_dir: str,
-    cfg=None,
     upto_batch_id: int | None = None,
 ) -> dict:
     """Fold incremental state for batches <= upto_batch_id (default: all
@@ -362,9 +345,7 @@ def compact_incremental_state(
     import json
 
     from .fsio import fs_delete, fs_read_text, fs_write_text_atomic
-    from .pipeline import LinkConfig
 
-    cfg = cfg or LinkConfig()
     recover_compaction(spark, out_dir)
 
     if upto_batch_id is None:
@@ -414,25 +395,16 @@ def compact_incremental_state(
     if fold_edges:
         caps["edges"] = edges_upto
     for table, cap in caps.items():
-        src = spark.read.parquet(f"{out_dir}/{table}").where(
-            F.col("batch_id") <= cap
+        (
+            spark.read.parquet(f"{out_dir}/{table}")
+            .where(F.col("batch_id") <= cap)
+            .drop("batch_id")
+            .coalesce(spark.sparkContext.defaultParallelism)
+            .write.mode("overwrite")
+            .parquet(f"{out_dir}/.compact_tmp/{table}")
         )
-        if table == "edges":
-            # edges carry no pfx column (they are never prefix-pruned;
-            # CC reads them in full) — cap file count at the same knob
-            folded = src.drop("batch_id")
-            writer = folded.repartition(
-                int(getattr(cfg, "state_prefixes", 64))
-            ).write
-        else:
-            # membership rows are immutable; one file per pfx dir keeps
-            # the post-compaction file count == cfg.state_prefixes
-            folded = src.drop("batch_id")
-            writer = folded.repartition("pfx").write.partitionBy("pfx")
-        # write first, then count from the written parquet's footers — a
-        # metadata-only job; counting the DataFrame before the write would
-        # run the whole fold twice
-        writer.mode("overwrite").parquet(f"{out_dir}/.compact_tmp/{table}")
+        # count from the written parquet's footers — a metadata-only job;
+        # counting the DataFrame before the write would run the fold twice
         counts[table] = spark.read.parquet(
             f"{out_dir}/.compact_tmp/{table}"
         ).count()
@@ -680,10 +652,12 @@ def run_incremental_link(
     partition after every K scored micro-batches (upto = the batch that
     just finished — safe inside foreachBatch because its edges partition
     is already on disk when incremental_link_batch returns, so a
-    checkpoint-replay of the folded batch is a correct no-op). Bounds
-    state file/partition count at O(state_prefixes + K) instead of
-    O(total batches ever). An interrupted compaction is finished before
-    the scoring query starts (recover_compaction)."""
+    checkpoint-replay of the folded batch is a correct no-op). Each table
+    then holds the base's at most defaultParallelism files plus fewer
+    than K batch_id partitions of at most spark.sql.shuffle.partitions
+    files each: O(K) files, not O(total batches ever). An interrupted
+    compaction is finished before the scoring query starts
+    (recover_compaction)."""
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         m = generate_mentions(batch_df, (1, 2, 3), lang, extra_cols=("warc_ts",))
@@ -709,7 +683,7 @@ def run_incremental_link(
         # batch_id's edges are on disk by now (incremental_link_batch
         # returned), so folding up to and INCLUDING it is replay-safe
         if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_incremental_state(spark, out_dir, cfg, upto_batch_id=batch_id)
+            compact_incremental_state(spark, out_dir, upto_batch_id=batch_id)
 
     # schema of the mention table = generate_mentions' analyzed output
     # schema (no job runs for this) + the batch_id partition column

@@ -16,7 +16,7 @@ from pelinker_spark.streaming import (
     recover_compaction,
 )
 
-CFG = LinkConfig(state_prefixes=8, lsh_min_mentions=1)
+CFG = LinkConfig(lsh_min_mentions=1)
 
 BATCHES = [
     ["activate kinase", "harvard university", "alpha synuclein",
@@ -60,7 +60,7 @@ def test_compaction_preserves_pairing_caps_and_state(spark, tmp_path):
         nk = spark.createDataFrame([(k,) for k in BATCHES[b]], "key string")
         incremental_link_batch(spark, nk, cmp_, CFG, batch_id=b)
     before = _state_counts(spark, cmp_)
-    res = compact_incremental_state(spark, cmp_, CFG, upto_batch_id=1)
+    res = compact_incremental_state(spark, cmp_, upto_batch_id=1)
     assert res["upto"] == 1 and compacted_upto(spark, cmp_) == 1
     assert _state_counts(spark, cmp_) == before
 
@@ -90,7 +90,7 @@ def test_replay_of_folded_batch_is_noop(spark, tmp_path):
     caps."""
     out = str(tmp_path / "st")
     _drip(spark, out, 1)
-    compact_incremental_state(spark, out, CFG, upto_batch_id=1)
+    compact_incremental_state(spark, out, upto_batch_id=1)
     before = _state_counts(spark, out)
     edges_before = _edges(spark, out)
 
@@ -106,7 +106,7 @@ def test_default_upto_spares_newest_batch(spark, tmp_path):
     its replay still runs in full."""
     out = str(tmp_path / "st")
     _drip(spark, out, 2)
-    res = compact_incremental_state(spark, out, CFG)  # no explicit upto
+    res = compact_incremental_state(spark, out)  # no explicit upto
     assert res["upto"] == 1
     batches = {
         r["batch_id"]
@@ -128,7 +128,7 @@ def test_crash_recovery_mid_swap(spark, tmp_path, monkeypatch):
     clean, crash = str(tmp_path / "clean"), str(tmp_path / "crash")
     for out in (clean, crash):
         _drip(spark, out, 1)
-    expect = compact_incremental_state(spark, clean, CFG, upto_batch_id=1)
+    expect = compact_incremental_state(spark, clean, upto_batch_id=1)
 
     real_swap = S._swap_in_base
     calls = {"n": 0}
@@ -141,7 +141,7 @@ def test_crash_recovery_mid_swap(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(S, "_swap_in_base", dying_swap)
     with pytest.raises(RuntimeError):
-        compact_incremental_state(spark, crash, CFG, upto_batch_id=1)
+        compact_incremental_state(spark, crash, upto_batch_id=1)
     monkeypatch.setattr(S, "_swap_in_base", real_swap)
 
     # crashed state: pending marker present, no commit watermark
@@ -176,7 +176,7 @@ def test_edges_fold_capped_at_cc_watermark(spark, tmp_path):
         for r in incremental_components(spark, out).collect()
     }
 
-    res = compact_incremental_state(spark, out, CFG, upto_batch_id=2)
+    res = compact_incremental_state(spark, out, upto_batch_id=2)
     assert res["upto"] == 2  # membership folds to the requested cap
     assert res["edges_upto"] == 1  # edges stop at the CC watermark
 
@@ -208,7 +208,7 @@ def test_edges_fold_without_cc_state(spark, tmp_path):
     _drip(spark, ref, 2)
     _drip(spark, cmp_, 2)
 
-    res = compact_incremental_state(spark, cmp_, CFG, upto_batch_id=1)
+    res = compact_incremental_state(spark, cmp_, upto_batch_id=1)
     assert res["edges_upto"] == 1
     got = {
         (r.key, r.component)

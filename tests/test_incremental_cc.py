@@ -17,7 +17,7 @@ from pelinker_spark.streaming import (
     incremental_link_batch,
 )
 
-CFG = LinkConfig(state_prefixes=8, lsh_min_mentions=1)
+CFG = LinkConfig(lsh_min_mentions=1)
 
 # three drops whose typo'd repeats create cross-batch merges: batch 1
 # must join keys into batch-0 components, batch 2 must bridge further

@@ -189,67 +189,61 @@ def test_incremental_cap_applies_at_emission_time(spark, tmp_path):
     ]
 
 
-def test_state_prefix_pruning(spark, tmp_path):
-    """Membership state is partitioned by a bucket-hash prefix, and a
-    batch's history read opens ONLY the prefix directories it touched —
-    proportional to the batch's blocking neighborhood, not to accumulated
-    history. A wide batch 0 then a single-key batch 1, planned with AQE
-    off as inside foreachBatch: building the pair frame runs no Spark job
-    beyond the two state tables' own reads (no driver-side probe), the
-    history scan opens under a quarter of the state files, and pairing
-    still sees the cross-batch partner."""
+def test_state_layout_and_history_read(spark, tmp_path):
+    """Membership state is partitioned by batch_id alone: a batch
+    directory holds at most spark.sql.shuffle.partitions parquet files
+    and no subdirectories, and compaction folds each table into a base
+    of at most defaultParallelism files. A wide batch 0 then a single-key
+    batch 1, planned with AQE off as inside foreachBatch: building the
+    pair frame runs no Spark job beyond the two state tables' own reads
+    (no driver-side probe), and pairing still sees the cross-batch
+    partner."""
     from pelinker_spark.pipeline import LinkConfig
     from pelinker_spark.streaming import (
+        BASE_BATCH,
+        _STATE_TABLES,
         _write_incremental_state,
+        compact_incremental_state,
         incremental_candidate_pairs,
     )
 
-    cfg = LinkConfig(state_prefixes=64, lsh_min_mentions=1)
-    # batch 0: 400 distinct random-ish words → buckets spread over many
-    # prefixes; batch 1: one typo variant of a known batch-0 word
+    cfg = LinkConfig(lsh_min_mentions=1)
+    # batch 0 is deduplicated as incremental_link_batch does, so it has
+    # the shuffle partitioning every micro-batch's state write sees
     base = [f"surface{i:04d} term{i % 97}" for i in range(400)] + ["activate"]
     out = str(tmp_path / "pstate")
     b0 = spark.createDataFrame([(k,) for k in base], "key string")
-    _write_incremental_state(b0, out, cfg, 0)
+    _write_incremental_state(b0.dropDuplicates(["key"]), out, cfg, 0)
     b1 = spark.createDataFrame([("acti-vate",)], "key string")
     _write_incremental_state(b1, out, cfg, 1)
+
+    def layout(d):
+        entries = os.listdir(d)
+        dirs = [e for e in entries if os.path.isdir(os.path.join(d, e))]
+        return dirs, sum(e.endswith(".parquet") for e in entries)
+
+    max_files = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for t in _STATE_TABLES:
+        dirs, n_files = layout(f"{out}/{t}/batch_id=0")
+        assert dirs == [] and 1 <= n_files <= max_files, (t, dirs, n_files)
 
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        # a read of a directory with more partition directories than
-        # spark.sql.sources.parallelPartitionDiscovery.threshold lists
-        # them with a job of its own; that is the floor
         _, n_read = _jobs_in(spark, lambda: [
-            spark.read.parquet(f"{out}/{t}") for t in ("buckets", "compact")
+            spark.read.parquet(f"{out}/{t}") for t in _STATE_TABLES
         ])
         pairs, n_build = _jobs_in(
             spark, lambda: incremental_candidate_pairs(spark, out, cfg, 1)
         )
         got = {(r.key_a, r.key_b) for r in pairs.collect()}
-        plan = pairs._jdf.queryExecution().executedPlan()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert n_build <= n_read, (n_build, n_read)
-
-    # the history scans are the bucket-state scans that dynamic partition
-    # pruning filters; numFiles counts the files each actually opened
-    leaves = plan.collectLeaves()
-    history_files = [
-        leaf.metrics().get("numFiles").get().value()
-        for leaf in (leaves.apply(i) for i in range(leaves.size()))
-        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
-        and leaf.relation().location().rootPaths().head().toString()
-        .endswith("/buckets")
-        and "dynamicpruning" in leaf.partitionFilters().toString()
-    ]
-    all_files = sum(
-        f.endswith(".parquet")
-        for _, _, fs in os.walk(f"{out}/buckets")
-        for f in fs
-    )
-    assert history_files, plan.toString()
-    assert max(history_files) < all_files / 4, (history_files, all_files)
-
-    # pairing across batches still works through the pruned read
     assert ("acti-vate", "activate") in got
+
+    compact_incremental_state(spark, out, upto_batch_id=1)
+    for t in _STATE_TABLES:
+        dirs, n_files = layout(f"{out}/{t}/batch_id={BASE_BATCH}")
+        assert dirs == [], (t, dirs)
+        assert 1 <= n_files <= spark.sparkContext.defaultParallelism, (t, n_files)

@@ -5,11 +5,11 @@ Runs run_incremental_link twice on the same K drops — plain, then with
 compact_every=1 — and reports, per state table, the parquet data-file
 count each run leaves behind, plus edge-set equality and both walls.
 The point being evidenced: an uncompacted stream's state file count
-grows O(batches x prefixes), the compacted stream's is bounded by
-O(state_prefixes) regardless of how many micro-batches ran.
+grows O(batches), the compacted stream's is bounded by the base's at
+most defaultParallelism files per table regardless of how many
+micro-batches ran.
 
-Usage: python tools/compaction_bench.py <cores> <n_pages> <n_drops> [K]
-(K = state_prefixes fanout; default LinkConfig's 64)
+Usage: python tools/compaction_bench.py <cores> <n_pages> <n_drops>
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 STATE_TABLES = ("buckets", "compact", "edges")
 
@@ -44,9 +44,7 @@ def main() -> None:
     cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     n_pages = int(sys.argv[2]) if len(sys.argv) > 2 else 40000
     n_drops = int(sys.argv[3]) if len(sys.argv) > 3 else 5
-    k_pfx = int(sys.argv[4]) if len(sys.argv) > 4 else None
 
-    from pelinker_spark.pipeline import LinkConfig
     from pelinker_spark.session import get_spark
     from pelinker_spark.streaming import run_incremental_link
     from pelinker_spark.synth import web_pages
@@ -61,7 +59,6 @@ def main() -> None:
                 spark, per, seed=100 + d, n_entities=200, partitions=8
             ).coalesce(1).write.mode("append").parquet(pages_dir)
 
-        cfg = LinkConfig(**({"state_prefixes": k_pfx} if k_pfx else {}))
         result: dict = {"cores": cores, "n_pages": per * n_drops,
                         "n_drops": n_drops}
         edges = {}
@@ -70,7 +67,7 @@ def main() -> None:
             ck = f"{tmp}/ck_{variant}"
             t0 = time.monotonic()
             run_incremental_link(
-                spark, pages_dir, out, ck, cfg=cfg,
+                spark, pages_dir, out, ck,
                 max_files_per_trigger=1, compact_every=every,
             )
             result[f"{variant}_sec"] = round(time.monotonic() - t0, 2)

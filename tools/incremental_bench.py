@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Incremental-vs-batch linking benchmark.
 
-Synthesizes a page corpus as K separate drops (files), runs the chained
-incremental pipeline (run_incremental_link: single-extraction ingest →
-first-seen feed → per-batch scoring against accumulated state →
-finalize), then the batch pipeline on the same corpus, and prints one
-JSON line with both walls, per-batch edge/bucket growth, and cluster
-counts.
+Synthesizes a page corpus as K separate drops (files), lands them one
+at a time and runs the chained incremental pipeline on each
+(run_incremental_link: single-extraction ingest → first-seen feed →
+per-batch scoring against accumulated state), finalizes, then runs the
+batch pipeline on the same corpus, and prints one JSON line with both
+walls, the per-drop latencies and their growth (last / first), the
+state file count, per-batch edge/bucket growth, and cluster counts.
 
 Cluster counts may differ slightly from batch mode under DEFAULT caps:
 the incremental hot-bucket cap applies to the accumulated size at
@@ -14,10 +15,8 @@ emission time (pairs emitted before a bucket went hot stay), while batch
 mode drops hot blocks wholesale — the documented append-only-stream
 semantics (streaming.incremental_link_batch).
 
-Per-batch `scanned_rows` vs `history_rows` reconstructs the file-source
-pruning receipt (VERDICT r3 #3): the scorer reads only bucket-state
-partitions whose pfx the batch touched, so scanned ~ blocking
-neighborhood, not total accumulated state.
+Per-batch `history_rows` is the accumulated bucket state the scorer's
+history read scans at that batch.
 
 Per-batch `fs_old_shuffle_rows` vs `fs_new_shuffle_rows` is the
 first-seen shuffle receipt (VERDICT r4 #1): against the ACTUAL state
@@ -41,19 +40,25 @@ exactly what production executes at scale; the old formulation reverts
 to its at-scale sort-merge plan. The criterion: new ~ batch size and
 flat across batches; old ~ accumulated history and growing.
 
-Usage: python tools/incremental_bench.py <cores> <n_pages> <n_drops> [K]
-(K = state_prefixes fanout; default LinkConfig's 64)
+Usage: python tools/incremental_bench.py <cores> <n_pages> <n_drops>
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def parquet_files(root: str) -> int:
+    return sum(
+        f.endswith(".parquet") for _, _, fs in os.walk(root) for f in fs
+    )
 
 
 def load1() -> float:
@@ -78,7 +83,6 @@ def main() -> None:
     cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     n_pages = int(sys.argv[2]) if len(sys.argv) > 2 else 40000
     n_drops = int(sys.argv[3]) if len(sys.argv) > 3 else 5
-    k_pfx = int(sys.argv[4]) if len(sys.argv) > 4 else None
 
     from pyspark.sql import functions as F
 
@@ -99,17 +103,18 @@ def main() -> None:
         extra_conf={"spark.ui.enabled": "true"},
     )
     tmp = tempfile.mkdtemp(prefix="pel_incbench_")
+    drops_dir = f"{tmp}/drops"
     pages_dir = f"{tmp}/pages"
     out = f"{tmp}/out"
     ck = f"{tmp}/ck"
     try:
-        # K deterministic drops, one file each → K ingest micro-batches at
-        # maxFilesPerTrigger=1 (disjoint seeds ≈ disjoint crawl slices)
+        # K deterministic drops, one file each (disjoint seeds ≈ disjoint
+        # crawl slices), staged outside the stream's source directory
         per = n_pages // n_drops
         for d in range(n_drops):
             web_pages(
                 spark, per, seed=100 + d, n_entities=200, partitions=8
-            ).coalesce(1).write.mode("append").parquet(pages_dir)
+            ).coalesce(1).write.parquet(f"{drops_dir}/{d}")
 
         # warm-up (JIT + UDF workers), excluded
         wp = web_pages(spark, 2000, seed=7, n_entities=50, partitions=8)
@@ -117,19 +122,25 @@ def main() -> None:
         w.clusters.count()
         w.unpersist()
 
-        cfg = LinkConfig(**({"state_prefixes": k_pfx} if k_pfx else {}))
         la = load1()
+        drop_s = []
+        for d in range(n_drops):
+            # one drop lands, then the stream processes it (availableNow)
+            spark.read.parquet(f"{drops_dir}/{d}").coalesce(1).write.mode(
+                "append"
+            ).parquet(pages_dir)
+            t0 = time.monotonic()
+            run_incremental_link(spark, pages_dir, out, ck)
+            drop_s.append(time.monotonic() - t0)
+        state_files = parquet_files(out)
         t0 = time.monotonic()
-        run_incremental_link(
-            spark, pages_dir, out, ck, cfg=cfg, max_files_per_trigger=1
-        )
         inc_clusters = (
             finalize_incremental_link(spark, out)
             .select("cluster_id")
             .distinct()
             .count()
         )
-        inc_sec = time.monotonic() - t0
+        inc_sec = sum(drop_s) + time.monotonic() - t0
         lb = load1()
 
         per_batch = [
@@ -154,25 +165,12 @@ def main() -> None:
             )
         ]
 
-        # File-source pruning receipt: for each batch, rows the scorer's
-        # history read actually scanned (pfx dirs the batch touched, up to
-        # and including this batch) vs the full accumulated history at
-        # that point. scanned/history ~ touched-neighborhood fraction.
-        buckets = spark.read.parquet(f"{out}/buckets").select(
-            "batch_id", "pfx"
-        ).persist()
+        # accumulated bucket state the history read scans at each batch
+        buckets = spark.read.parquet(f"{out}/buckets").select("batch_id")
         for pb in per_batch:
-            b = pb["batch"]
-            touched = [
-                r["pfx"]
-                for r in buckets.where(F.col("batch_id") == b)
-                .select("pfx").distinct().collect()
-            ]
-            hist = buckets.where(F.col("batch_id") <= b)
-            pb["touched_pfx"] = len(touched)
-            pb["scanned_rows"] = hist.where(F.col("pfx").isin(touched)).count()
-            pb["history_rows"] = hist.count()
-        buckets.unpersist()
+            pb["history_rows"] = buckets.where(
+                F.col("batch_id") <= pb["batch"]
+            ).count()
 
         # First-seen shuffle receipt (VERDICT r4 #1): replay each batch's
         # key set through the OLD sort-merge anti-join and the NEW
@@ -233,6 +231,9 @@ def main() -> None:
                     "n_drops": n_drops,
                     "incremental_sec": round(inc_sec, 2),
                     "batch_sec": round(batch_sec, 2),
+                    "drop_s": [round(x, 2) for x in drop_s],
+                    "drop_growth": round(drop_s[-1] / drop_s[0], 3),
+                    "state_files": state_files,
                     "inc_clusters": inc_clusters,
                     "batch_clusters": batch_clusters,
                     "per_batch": per_batch,
